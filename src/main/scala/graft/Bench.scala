@@ -278,7 +278,9 @@ object Bench {
     // full 15-table extract + parquet sink — on the SAME 12-era deep corpus
     // as the decode metric (98,304 blocks), decode STAGED to parquet once
     // and 16 CONCURRENT table writes over column-pruned stage scans.
-    // Probed alternatives (tools/EtlProbe, this machine): cached-decode +
+    // This is StagedExport.exportAll, the function the CLI's `all-blocks
+    // --separate` calls. Alternatives measured on local[32] while they
+    // still existed in the program: cached-decode +
     // sequential writes 1.9k blocks/s, cached + 16 concurrent 2.1-3.5k
     // (every job re-deserializes the full cached `body` column — the cache
     // stores the struct as ONE column, so pruning can't help), splayed

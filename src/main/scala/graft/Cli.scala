@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.export.{BeaconJson, Compaction, EraStateManager, Sinks}
+import graft.export.{BeaconJson, Compaction, EraStateManager, Sinks, StagedExport}
 import graft.operators.Normalizer
 import graft.sources.RemoteDiscovery
 
@@ -63,6 +63,13 @@ object Cli {
     }.getOrElse(128L) << 20
 
   def main(args: Array[String]): Unit = {
+    val status = run(args)
+    if (status != 0) sys.exit(status)
+  }
+
+  /** The CLI proper: run one invocation and return its exit status
+    * (non-zero when an era of the incremental loop failed). */
+  private[graft] def run(args: Array[String]): Int = {
     // split argv into flags, flag values, and positionals — a flag's value
     // must not leak into the positional list regardless of ordering
     val flagValueIdx = args.zipWithIndex.collect {
@@ -76,6 +83,7 @@ object Cli {
     // only stop a session this invocation created — never one an embedding
     // host (tests, a notebook) already owns
     val preexisting = SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+    var status = 0
     try {
       if (flags.contains("--era-status")) eraStatus(opts, pos)
       else if (flags.contains("--clean-failed-eras")) cleanFailed(opts, pos)
@@ -129,11 +137,12 @@ object Cli {
           s"zorder(${cols(0)}, ${cols(1)})" +
           (if (aborted > 0) s"; $aborted aborted on concurrent writes" else ""))
       }
-      else if (flags.contains("--remote")) remote(opts, pos, flags)
+      else if (flags.contains("--remote")) status = remote(opts, pos, flags)
       else if (pos.headOption.contains("query")) query(pos)
       else if (pos.length >= 2) local(opts, pos, flags)
       else printHelp()
     } finally if (preexisting.isEmpty) SparkSession.getActiveSession.foreach(_.stop())
+    status
   }
 
   private def parseFlags(args: Array[String]): Map[String, String] =
@@ -177,30 +186,33 @@ object Cli {
         }
       case "all-blocks" =>
         val jdbcUrl = opts.getOrElse("--export-jdbc", "")
-        val blocks = Normalizer.decodeBlocks(records).cache()
-        try {
-          if (jdbcUrl.nonEmpty)
-            // `--export clickhouse` analogue: one table per dataset,
-            // batched inserts with retry (S15)
-            Normalizer.allDatasets(blocks).toSeq.sortBy(_._1).foreach { case (n, df) =>
-              Sinks.jdbcSink(df, jdbcUrl, n)
-              println(s"$n: exported to jdbc")
-            }
-          else if (flags.contains("--separate"))
-            Sinks.exportSeparateFiles(Normalizer.allDatasets(blocks),
-              requireArg(pos, 2, "output path"))
-              .foreach { case (n, c) => println(s"$n: $c records") }
-          else {
-            val out = requireArg(pos, 2, "output path")
-            if (flags.contains("--parity") && !Sinks.supportsEnvelope(out))
-              fail("--parity applies to .csv/.json/.jsonl outputs only")
-            val wide = Normalizer.wideBlocks(blocks)
-            val c =
-              if (flags.contains("--parity")) Sinks.writeWithEnvelope(wide, out, "blocks")
-              else Sinks.write(wide, out)
-            println(s"all-blocks: $c records")
-          }
-        } finally blocks.unpersist()
+        val blocks = Normalizer.decodeBlocks(records)
+        if (jdbcUrl.nonEmpty) {
+          // `--export clickhouse` analogue: one table per dataset,
+          // batched inserts with retry (S15)
+          val cached = blocks.cache()
+          try Normalizer.allDatasets(cached).toSeq.sortBy(_._1).foreach { case (n, df) =>
+            Sinks.jdbcSink(df, jdbcUrl, n)
+            println(s"$n: exported to jdbc")
+          } finally cached.unpersist()
+        } else if (flags.contains("--separate")) {
+          // one decode into a parquet stage beside the output, then the 15
+          // tables written concurrently from it, each counted by its write
+          val out = requireArg(pos, 2, "output path")
+          val stage = StagedExport.stageBeside(out)
+          try StagedExport.exportAll(blocks, stage, out).toSeq.sortBy(_._1)
+            .foreach { case (n, (c, _)) => println(s"$n: $c records") }
+          finally StagedExport.dropStage(spark, stage)
+        } else {
+          val out = requireArg(pos, 2, "output path")
+          if (flags.contains("--parity") && !Sinks.supportsEnvelope(out))
+            fail("--parity applies to .csv/.json/.jsonl outputs only")
+          val wide = Normalizer.wideBlocks(blocks)
+          val c =
+            if (flags.contains("--parity")) Sinks.writeWithEnvelope(wide, out, "blocks")
+            else Sinks.write(wide, out)
+          println(s"all-blocks: $c records")
+        }
       case ds if Normalizer.datasetNames.contains(ds) =>
         val jdbcUrl = opts.getOrElse("--export-jdbc", "")
         // single-table extract: the section-pruned decode skips the other
@@ -255,7 +267,8 @@ object Cli {
 
   // ── remote incremental ETL (§3.2 shape) ─────────────────────────────────
 
-  private def remote(opts: Map[String, String], pos: Array[String], flags: Array[String]): Unit = {
+  /** Returns the exit status: 1 when any era of the range failed. */
+  private def remote(opts: Map[String, String], pos: Array[String], flags: Array[String]): Int = {
     // base URL: explicit positional (recognized by the scheme separator) or
     // the reference's env entry point (ERA_BASE_URL, with .env defaults —
     // remote_downloader.py:742-799)
@@ -276,7 +289,7 @@ object Cli {
     println(s"discovered ${discovered.size} era files")
     if (flags.contains("--download-only")) {
       discovered.foreach { case (_, url) => RemoteDiscovery.download(url, cacheDir) }
-      return
+      return 0
     }
     val verb = rest.lift(2).getOrElse("all-blocks")
     val out = rest.lift(3).getOrElse("output/remote.parquet")
@@ -307,7 +320,17 @@ object Cli {
         spark, state, network, eras, out, verb,
         force = flags.contains("--force"), dataRoot = Some(dataRoot))(loadEra)
     }
-    println(s"processed ${processed.size} of ${eras.size} eras (rest completed)")
+    // every not-yet-completed era of the range was attempted this run, so
+    // the ones whose latest state is `failed` are exactly this run's failures
+    val failed = state.failedEras(network).filter(eras.toSet)
+    if (failed.isEmpty) {
+      println(s"processed ${processed.size} of ${eras.size} eras (rest completed)")
+      0
+    } else {
+      println(s"processed ${processed.size} of ${eras.size} eras; " +
+        s"${failed.size} failed: ${failed.mkString(", ")}")
+      1
+    }
   }
 
   // ── schema migrations (migration_manager.py / commands/migrate.py) ──────

@@ -73,11 +73,15 @@ object GraftExtensions {
     * semantics had to be kept in sync by review (and whose primitive-seq
     * args silently unboxed null ELEMENTS to 0, the exact garbage class the
     * r14 kernels' null guards close); now the one builder table serves
-    * both paths, codegen included. */
+    * both paths, codegen included. The probe only ANALYZES a query naming
+    * two of the functions: resolution is the question, and analysis
+    * answers it without launching a job on every call. */
   def ensureRegistered(spark: SparkSession): Unit = {
     val registered =
-      try { spark.sql("SELECT hex_popcount('0x0f'), hash64('x')").collect(); true }
-      catch { case _: Exception => false }
+      try {
+        spark.sql("SELECT hex_popcount('0x0f'), hash64('x')").queryExecution.assertAnalyzed()
+        true
+      } catch { case _: Exception => false }
     if (!registered)
       builders.foreach { case (name, className, builder) =>
         org.apache.spark.sql.graftutil.FunctionInjector.register(

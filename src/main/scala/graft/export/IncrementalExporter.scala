@@ -33,28 +33,18 @@ import graft.operators.Normalizer
  */
 object IncrementalExporter {
 
-  /** Observed row count of a completed write. The write job has already
-    * finished when this is called, but `QueryExecutionListener` delivery
-    * is ASYNCHRONOUS (the execution-listener bus), so the metric can trail
-    * the action by a beat — poll briefly rather than `Observation.get`,
-    * whose wait is unbounded if a Spark regression ever stopped reporting
-    * observed metrics for write commands. The `fallback` (a footer-only
-    * read-back count — the pre-r13 shape) keeps the completion record
-    * CORRECT even in that failure mode; the no-read-jobs spec assertion
-    * is what would flag the regression. */
-  private def observedRows(obs: org.apache.spark.sql.Observation,
-      fallback: => Long): Long = {
-    import scala.concurrent.duration._
-    val f = scala.concurrent.Future(obs.get("rows").asInstanceOf[Long])(
-      scala.concurrent.ExecutionContext.global)
-    try scala.concurrent.Await.result(f, 30.seconds)
-    catch { case _: java.util.concurrent.TimeoutException => fallback }
-  }
-
   /** Process `eras` incrementally, returning the eras actually processed
     * this run (in order). `loadEra` maps an era number to its raw era
     * RECORDS frame (the `era` format scan); `verb` is `all-blocks` for the
-    * full 15-table fan-out or a single dataset name. */
+    * full 15-table fan-out or a single dataset name.
+    *
+    * `all-blocks` is the staged, write-counted fan-out
+    * ([[StagedExport.exportAll]]): the era decodes once into a parquet
+    * stage beside its output (`<stem>_era_<n>__stage`, removed when the
+    * era ends), the 15 tables are written concurrently from it, and each
+    * table's completion count comes from its own write job. A killed
+    * run's stage is overwritten by the resume's, so the output directory
+    * a resume leaves equals an uninterrupted run's. */
   def run(spark: SparkSession, state: EraStateManager, network: String,
       eras: Seq[Long], out: String, verb: String = "all-blocks",
       force: Boolean = false, dataRoot: Option[String] = None)(
@@ -68,16 +58,15 @@ object IncrementalExporter {
           network, era)
       state.recordEraStart(era, network)
       try {
+        val eraOut = Sinks.eraOutputFilename(out, era.toInt)
         val counts =
           if (verb == "all-blocks") {
-            val blocks = Normalizer.decodeBlocks(loadEra(era)).cache()
-            try Sinks.exportSeparateFiles(Normalizer.allDatasets(blocks),
-              Sinks.eraOutputFilename(out, era.toInt))
-            finally blocks.unpersist()
+            val stage = StagedExport.stageBeside(eraOut)
+            try StagedExport.exportAll(Normalizer.decodeBlocks(loadEra(era)), stage, eraOut)
+              .map { case (name, (rows, _)) => name -> rows }
+            finally StagedExport.dropStage(spark, stage)
           } else // single-dataset verb: section-pruned decode, nothing to share
-            Map(verb -> Sinks.write(
-              Normalizer.datasetPruned(loadEra(era), verb),
-              Sinks.eraOutputFilename(out, era.toInt)))
+            Map(verb -> Sinks.write(Normalizer.datasetPruned(loadEra(era), verb), eraOut))
         state.recordEraCompletion(era, network, counts.keys.toSeq.sorted,
           counts.values.sum)
         processed += era
@@ -164,40 +153,29 @@ object IncrementalExporter {
         if (force) dropEraPartitions(era)
         state.recordEraStart(era, network)
         try {
-          import spark.implicits._
           Normalizer.decodeBlocks(loadEra(era)).toDF().coalesce(4)
             .write.mode("overwrite").option("compression", stageCodec).parquet(stage)
-          val staged = spark.read.parquet(stage).as[graft.model.DecodedBlock]
-          val tables = StagedExport.networkTables(staged, network)
+          val tables = StagedExport.networkTables(StagedExport.readStage(spark, stage), network)
           dropEraPartitions(era)
-          // per-table counts ride the write jobs as observed metrics: a
-          // CollectMetrics node above each extract counts the rows the
-          // overwrite commits, so completion bookkeeping costs ZERO
+          // per-table counts ride the write jobs as observed metrics
+          // (Sinks.writeCounted), so completion bookkeeping costs ZERO
           // post-write jobs (WarehouseResumeSpec asserts no read-back
           // count job ever runs). wide_blocks is still EXCLUDED from the
           // completion record: it re-shapes the same blocks, and counting
           // it would make total_records diverge from the file-mode loop's
           // accounting for the same era.
-          val observed = tables.map { case (name, df) =>
-            val obs = org.apache.spark.sql.Observation(s"wh_rows_${name}_$era")
-            (name, obs,
-              df.observe(obs, org.apache.spark.sql.functions.count(
-                org.apache.spark.sql.functions.lit(1)).as("rows")))
-          }
-          Sinks.runQuiescent(spark, parallelism, observed.map {
-            case (name, _, df) =>
-              () => Sinks.overwriteEraPartitions(df, s"$netDir/$name",
+          val written = Sinks.runQuiescent(spark, parallelism, tables.map {
+            case (name, df) => () =>
+              val part = s"$netDir/$name/era_number=$era"
+              Sinks.writeCounted(df)(Sinks.overwriteEraPartitions(_, s"$netDir/$name",
                 rowBytes.get(name)
                   .map(b => math.max(1L, (targetFileBytes / b).toLong))
-                  .getOrElse(0L))
+                  .getOrElse(0L))) {
+                if (fs.exists(hp(part))) spark.read.parquet(part).count() else 0L
+              }
           })
-          val counts = observed.collect {
-            case (name, obs, _) if name != "wide_blocks" =>
-              name -> observedRows(obs, {
-                val p = s"$netDir/$name/era_number=$era"
-                if (fs.exists(hp(p))) spark.read.parquet(p).count() else 0L
-              })
-          }.toMap
+          val counts = tables.map(_._1).zip(written)
+            .filter(_._1 != "wide_blocks").toMap
           rowBytes ++= counts.flatMap { case (name, rows) =>
             if (rows <= 0) None
             else {

@@ -4,7 +4,8 @@ import java.nio.file.{Files, Paths, StandardOpenOption}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Observation}
+import org.apache.spark.sql.functions.{count, lit}
 
 /**
  * Multi-format sink layer (SURVEY.md §2.1 S11–S16), mirroring the
@@ -42,7 +43,7 @@ object Sinks {
     s"${stem}_$dataset$ext"
   }
 
-  private def splitExt(path: String): (String, String) = {
+  private[export] def splitExt(path: String): (String, String) = {
     val i = path.lastIndexOf('.')
     val slash = path.lastIndexOf('/')
     if (i > slash) (path.substring(0, i), path.substring(i)) else (path, ".parquet")
@@ -55,31 +56,46 @@ object Sinks {
   }
 
   /** Write one DataFrame in the format implied by the extension. Returns
-    * the row count (also written to the sidecar). For parquet the count
-    * comes from the written footers (metadata-only read) so the data is
-    * computed exactly once; csv/json cache the frame across the write +
-    * count pair, so the sidecar count always agrees with the data actually
-    * written (a nondeterministic frame recomputed for a separate count
-    * could drift) and the computation isn't paid twice. */
+    * the row count (also written to the sidecar), taken from the write job
+    * itself ([[writeCounted]]): the data is computed exactly once, no read
+    * job follows the write, and the count is the rows actually committed
+    * even for a nondeterministic frame. */
   def write(df: DataFrame, path: String, singleFile: Boolean = false,
       metadata: Map[String, String] = Map.empty): Long = {
-    val out = if (singleFile) df.coalesce(1) else df
-    def writeCached(doWrite: DataFrame => Unit): Long = {
-      val cached = out.persist()
-      try { doWrite(cached); cached.count() }
-      finally cached.unpersist()
-    }
-    val n = formatOf(path) match {
-      case "json" =>
-        writeCached(_.write.mode("overwrite").json(path))
-      case "csv" =>
-        writeCached(_.write.mode("overwrite").option("header", "true").csv(path))
-      case _ =>
-        out.write.mode("overwrite").parquet(path)
-        df.sparkSession.read.parquet(path).count() // footer-only
-    }
+    val fmt = formatOf(path)
+    val n = writeCounted(if (singleFile) df.coalesce(1) else df)(
+      writeAs(_, fmt, path))(readBack(df, fmt, path))
     if (metadata.nonEmpty) writeMetadataSidecar(path, metadata + ("rows" -> n.toString))
     n
+  }
+
+  /** csv carries its header line; the option is inert for the others. */
+  private def writeAs(df: DataFrame, fmt: String, path: String): Unit =
+    df.write.mode("overwrite").option("header", "true").format(fmt).save(path)
+
+  /** Count `df`'s rows as written at `path` (footer-only for parquet). */
+  private def readBack(df: DataFrame, fmt: String, path: String): Long =
+    df.sparkSession.read.schema(df.schema).option("header", "true")
+      .format(fmt).load(path).count()
+
+  /** Run `write` over `df` with a row counter riding the write job (a
+    * `Dataset.observe` metric) and return the rows it wrote. The job has
+    * finished when `write` returns, but `QueryExecutionListener` delivery
+    * is ASYNCHRONOUS (the execution-listener bus), so the metric can trail
+    * the action by a beat: wait a bounded time rather than
+    * `Observation.get`, whose wait is unbounded if a Spark regression ever
+    * stopped reporting observed metrics for write commands. `readBack`
+    * (counting the written files) keeps the count CORRECT in that failure
+    * mode; the specs' no-read-back-job assertions are what would flag the
+    * regression. Shared by [[write]] and
+    * [[IncrementalExporter.runWarehouse]]. */
+  private[export] def writeCounted(df: DataFrame)(write: DataFrame => Unit)(
+      readBack: => Long): Long = {
+    import scala.concurrent.duration._
+    val obs = Observation()
+    write(df.observe(obs, count(lit(1)).as("rows")))
+    try scala.concurrent.Await.result(obs.future, 30.seconds).getAs[Long]("rows")
+    catch { case _: java.util.concurrent.TimeoutException => readBack }
   }
 
   /** The at-rest layout for the 15-table warehouse at archive scale:
@@ -134,13 +150,7 @@ object Sinks {
     val fmt = formatOf(path)
     require(fmt == "json" || fmt == "csv", s"envelope parity applies to csv/json, not $fmt")
     val tmp = s"$path.__parts"
-    val cached = df.coalesce(1).persist()
-    val n =
-      try {
-        if (fmt == "json") cached.write.mode("overwrite").json(tmp)
-        else cached.write.mode("overwrite").option("header", "true").csv(tmp)
-        cached.count()
-      } finally cached.unpersist()
+    val n = writeCounted(df.coalesce(1))(writeAs(_, fmt, tmp))(readBack(df, fmt, tmp))
     val listing = Files.list(Paths.get(tmp))
     val part =
       try listing.iterator().asScala
@@ -204,53 +214,34 @@ object Sinks {
     }
 
   /** S16: one output per dataset + SUMMARY.txt
-    * (parquet_exporter.py:71-103, csv_exporter.py:47-76). */
-  def exportSeparateFiles(
-      datasets: Map[String, DataFrame],
-      baseOutput: String,
-      metadata: Map[String, String] = Map.empty,
-      singleFile: Boolean = false): Map[String, Long] =
-    exportSeparateFilesTimed(datasets, baseOutput, metadata, singleFile,
-      parallelism = 1).map { case (n, (rows, _)) => n -> rows }
-
-  /** The fan-out with CONCURRENT table writes plus per-table wall time.
+    * (parquet_exporter.py:71-103, csv_exporter.py:47-76), with the table
+    * writes submitted CONCURRENTLY from a bounded pool ([[runQuiescent]]).
+    * Returns per-table (rows, seconds).
     *
-    * The 15 child tables are independent jobs over one shared (cached)
-    * decode, and most of them are tiny — sequentially each pays full
-    * job-scheduling + file-commit latency while 31 cores idle. Submitting
-    * the writes from a bounded thread pool lets the scheduler overlap
-    * them (multi-thread job submission is the supported Spark pattern for
-    * exactly this fan-out shape), which is where the ETL path's wall
-    * clock actually goes at bench scale — the per-table seconds this
-    * returns are the evidence. Output contents are byte-identical to the
-    * sequential path (disjoint output dirs, same per-table plans);
-    * `ExportParallelSpec` pins that equivalence. */
-  def exportSeparateFilesTimed(
+    * The 15 child tables are independent jobs, and most of them are tiny:
+    * one at a time, each pays full job-scheduling + file-commit latency
+    * while the cores idle. Multi-thread job submission is the supported
+    * Spark pattern for this fan-out shape, and the per-table seconds this
+    * returns are the evidence. Row counts ride each write job
+    * ([[write]]), so the fan-out launches one job per table and nothing
+    * else. Outputs are disjoint directories with the same per-table plans
+    * whatever the interleaving; `ExportParallelSpec` pins the contents,
+    * counts and SUMMARY against the per-table reference. */
+  def exportSeparateFiles(
       datasets: Map[String, DataFrame],
       baseOutput: String,
       metadata: Map[String, String] = Map.empty,
       singleFile: Boolean = false,
       parallelism: Int = 8): Map[String, (Long, Double)] = {
     val entries = datasets.toSeq.sortBy(_._1)
-    val timed: Seq[(String, (Long, Double))] =
-      if (parallelism <= 1)
-        entries.map { case (name, df) =>
-          val t0 = System.nanoTime()
-          val rows = write(df, datasetFilename(baseOutput, name), singleFile, metadata)
-          name -> (rows, (System.nanoTime() - t0) / 1e9)
-        }
-      else {
-        val spark = entries.head._2.sparkSession
-        val results = runQuiescent(spark, parallelism, entries.map {
-          case (name, df) => () => {
-            val t0 = System.nanoTime()
-            val rows =
-              write(df, datasetFilename(baseOutput, name), singleFile, metadata)
-            (rows, (System.nanoTime() - t0) / 1e9)
-          }
-        })
-        entries.map(_._1).zip(results)
+    val spark = entries.head._2.sparkSession
+    val timed = entries.map(_._1).zip(runQuiescent(spark, parallelism, entries.map {
+      case (name, df) => () => {
+        val t0 = System.nanoTime()
+        val rows = write(df, datasetFilename(baseOutput, name), singleFile, metadata)
+        (rows, (System.nanoTime() - t0) / 1e9)
       }
+    }))
     val (stem, _) = splitExt(baseOutput)
     val summary = timed.map { case (n, (c, _)) => s"$n: $c records" }
       .mkString("", "\n", "\n")
@@ -269,8 +260,8 @@ object Sinks {
     * cancels the group (killing in-flight tasks), cancels the undone
     * futures, and drains the pool. A caller that records the failure and
     * starts cleaning up therefore never races stray write jobs. Shared by
-    * [[exportSeparateFilesTimed]] and
-    * [[graft.export.StagedExport.exportWarehouse]]. */
+    * [[exportSeparateFiles]], [[graft.export.StagedExport.exportWarehouse]]
+    * and [[IncrementalExporter.runWarehouse]]. */
   private[export] def runQuiescent[T](spark: org.apache.spark.sql.SparkSession,
       parallelism: Int, tasks: Seq[() => T]): Seq[T] = {
     val pool = java.util.concurrent.Executors.newFixedThreadPool(

@@ -1,6 +1,6 @@
 package graft.export
 
-import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
 
 import graft.model.DecodedBlock
 import graft.operators.Normalizer
@@ -8,18 +8,21 @@ import graft.operators.Normalizer
 /**
  * Staged 15-table fan-out: materialize the decoded blocks ONCE as parquet,
  * then run the per-table exports as concurrent column-pruned scans of the
- * stage.
+ * stage. This is the one era fan-out core: the CLI's `all-blocks
+ * --separate`, the incremental loop's `all-blocks` verb and the bench ETL
+ * all call [[exportAll]], and the warehouse writers share its stage-then-
+ * fan-out discipline.
  *
- * Why staging beats caching for the full-corpus extract (measured in
- * `tools/EtlProbe`, ~6× on the 98k-block bench corpus): a cached
- * `Dataset[DecodedBlock]` stores the whole `body` struct as ONE in-memory
- * column, so all 16 table jobs re-deserialize every child array of every
- * block; parquet stores each nested field as its own column chunk and
- * Spark's nested-schema pruning reaches through `body.<child>`, so the
- * deposits job reads only the deposits bytes, vectorized. The stage also
- * survives any corpus:memory ratio — at cluster scale the executor cache
- * cannot hold the corpus, a parquet stage trivially does — making this the
- * only fan-out shape that holds at 100 TB.
+ * Why staging beats caching (measured on the 98k-block bench corpus:
+ * cached decode + concurrent writes 1.9–3.5k blocks/s, parquet stage
+ * 11–15k): a cached `Dataset[DecodedBlock]` stores the whole `body` struct
+ * as ONE in-memory column, so all 16 table jobs re-deserialize every child
+ * array of every block; parquet stores each nested field as its own column
+ * chunk and Spark's nested-schema pruning reaches through `body.<child>`,
+ * so the deposits job reads only the deposits bytes, vectorized. The stage
+ * also survives any corpus:memory ratio — at cluster scale the executor
+ * cache cannot hold the corpus, a parquet stage trivially does — making
+ * this the only fan-out shape that holds at 100 TB.
  *
  * The reference fans its 15 tables out of one in-process decode pass
  * (`processor.py` fan-out); this is that shape re-expressed for a shared-
@@ -30,21 +33,43 @@ object StagedExport {
 
   /** Stage `blocks` under `stageDir` and export all 15 normalized tables
     * to `baseOutput` (reference naming via [[Sinks.datasetFilename]]).
-    * Returns per-table (rows, seconds). `stageFiles` bounds both stage
-    * fan-in and per-table output file count. */
+    * Returns per-table (rows, seconds), the rows counted by each table's
+    * own write job. `stageFiles` bounds both stage fan-in and per-table
+    * output file count. The stage is left in place: the caller owns its
+    * lifetime ([[stageBeside]] + [[dropStage]] for user-facing paths). */
   def exportAll(blocks: Dataset[DecodedBlock], stageDir: String,
       baseOutput: String, parallelism: Int = 16,
       stageFiles: Int = 32, stageCodec: String = "zstd"): Map[String, (Long, Double)] = {
-    val spark = blocks.sparkSession
-    import spark.implicits._
     // zstd stage: ~2× smaller than snappy for hex-heavy block payloads at
     // negligible extra CPU — halves both the write-back pressure staging
     // adds and the bytes every fan-out scan re-reads
     blocks.toDF().coalesce(stageFiles)
       .write.mode("overwrite").option("compression", stageCodec).parquet(stageDir)
-    val staged = spark.read.parquet(stageDir).as[DecodedBlock]
-    Sinks.exportSeparateFilesTimed(Normalizer.allDatasets(staged),
+    Sinks.exportSeparateFiles(Normalizer.allDatasets(readStage(blocks.sparkSession, stageDir)),
       baseOutput, parallelism = parallelism)
+  }
+
+  /** A stage written from `Dataset[DecodedBlock]`, read with the schema
+    * it was written with: parquet schema inference would launch a footer-
+    * reading job on every call. */
+  private[graft] def readStage(spark: SparkSession, stageDir: String): Dataset[DecodedBlock] =
+    spark.read.schema(Encoders.product[DecodedBlock].schema).parquet(stageDir)
+      .as(Encoders.product[DecodedBlock])
+
+  /** The stage directory for an export to `baseOutput`: a deterministic
+    * sibling `<stem>__stage`. Deterministic so a killed run's stage is
+    * overwritten by the resume instead of accumulating beside the output;
+    * not `_`-prefixed because Spark treats such paths as hidden and warns
+    * on every read of them. */
+  private[graft] def stageBeside(baseOutput: String): String =
+    s"${Sinks.splitExt(baseOutput)._1}__stage"
+
+  /** Remove a stage directory, through the Hadoop FileSystem bound to its
+    * URI (any store Spark can write); no-op when it does not exist. */
+  private[graft] def dropStage(spark: SparkSession, stageDir: String): Unit = {
+    val p = new org.apache.hadoop.fs.Path(stageDir)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (fs.exists(p)) fs.delete(p, true)
   }
 
   /** Stage once, then write the full AT-REST WAREHOUSE: every normalized

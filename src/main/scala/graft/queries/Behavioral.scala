@@ -245,7 +245,7 @@ object Behavioral {
         .observe(obs, sum(col("comp").cast("decimal(38,0)")).as("cs"))
         .localCheckpoint()
       // metric delivery is asynchronous (execution-listener bus) — bounded
-      // wait, same discipline as IncrementalExporter.observedRows; the
+      // wait, same discipline as Sinks.writeCounted; the
       // fallback 1-row aggregation keeps the loop CORRECT if delivery ever
       // regressed (and would show up as the extra job the spec watches)
       val s = {

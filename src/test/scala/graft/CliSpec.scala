@@ -1,10 +1,13 @@
 package graft
 
 import java.io.{ByteArrayOutputStream, PrintStream}
+import java.net.InetSocketAddress
 import java.nio.file.{Files, Paths}
 
+import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.operators.Normalizer
 import graft.testkit.EraFixtures
 
 /** CLI verb surface (cli.py:8-54 shape). Each test drives Cli.main
@@ -31,15 +34,92 @@ class CliSpec extends AnyFunSuite {
     assert(out.contains("\"sync_aggregate\"")) // altair body present
   }
 
+  /** `graft <eras> all-blocks <dir>/out.parquet --separate` on the shared
+    * test session (pre-existing, so the CLI leaves it running), checked
+    * against the staged fan-out's contract: each printed count equals the
+    * per-table reference, the stage beside the output is gone, and every
+    * job the call launched wrote output — none read it back to count it.
+    * Returns what the CLI printed. */
+  private def separateExport(eras: String, dir: String): String = {
+    val spark = TestSpark.spark
+    var out = ""
+    val jobs = JobLog.during(spark) {
+      out = captureOut {
+        Cli.main(Array(eras, "all-blocks", s"$dir/out.parquet", "--separate"))
+      }
+    }
+    assert(jobs.nonEmpty && JobLog.readOnly(jobs).isEmpty, s"read-back jobs ran: $jobs")
+    val left = new java.io.File(dir).list().toSeq
+    assert(!left.exists(_.endsWith("__stage")), s"stage left behind: $left")
+    val blocks = Normalizer.decodeBlocks(spark.read.format("era").load(eras))
+    Normalizer.datasetNames.foreach { t =>
+      val want = s"$t: ${Normalizer.dataset(blocks, t).count()} records"
+      assert(out.linesIterator.contains(want), s"expected '$want' in:\n$out")
+    }
+    out
+  }
+
   test("all-blocks --separate fans out the datasets with reference naming") {
     val dir = Files.createTempDirectory("cli-out").toString
-    val out = captureOut {
-      Cli.main(Array(eraDir, "all-blocks", s"$dir/out.parquet", "--separate"))
-    }
+    val out = separateExport(eraDir, dir)
     assert(out.contains("blocks: 8 records")) // 8 fixture eras, 1 block each
     assert(Files.exists(Paths.get(s"$dir/out_blocks.parquet")))
     assert(Files.exists(Paths.get(s"$dir/out_attestations.parquet")))
     assert(Files.exists(Paths.get(s"$dir/out_SUMMARY.txt")))
+  }
+
+  test("all-blocks --separate over from-scratch era files: same contract") {
+    val eras = Files.createTempDirectory("cli-syn-eras").toString
+    SyntheticEra.write(eras, 0, 6)
+    SyntheticEra.write(eras, 1, 5)
+    val dir = Files.createTempDirectory("cli-syn-out").toString
+    val out = separateExport(eras, dir)
+    assert(out.linesIterator.contains("blocks: 11 records"), out)
+    assert(out.linesIterator.contains("attestations: 11 records"), out)
+    assert(Files.exists(Paths.get(s"$dir/out_SUMMARY.txt")))
+  }
+
+  test("--remote names the era that failed and returns a non-zero status") {
+    // era 1 downloads intact; era 2's transfer is cut off half way — a
+    // corrupt era the loop must record as failed, not report as done
+    val src = Files.createTempDirectory("cli-remote-src").toString
+    val files = Seq(SyntheticEra.write(src, 1, 4), SyntheticEra.write(src, 2, 4))
+    val bytes = files.map(f => f.getName -> Files.readAllBytes(f.toPath)).toMap
+    val corrupt = files(1).getName
+    val server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
+    server.createContext("/", (ex: HttpExchange) => {
+      val name = ex.getRequestURI.getPath.stripPrefix("/")
+      val body: Array[Byte] =
+        if (Option(ex.getRequestURI.getQuery).exists(_.contains("list-type=2")))
+          bytes.keys.map(k => s"<Key>$k</Key>").mkString("<ListBucketResult>", "",
+            "</ListBucketResult>").getBytes("UTF-8")
+        else bytes.getOrElse(name, Array.emptyByteArray)
+      try {
+        if (body.isEmpty) ex.sendResponseHeaders(404, -1)
+        else {
+          ex.sendResponseHeaders(200, body.length)
+          val sent = if (name == corrupt) body.length / 2 else body.length
+          ex.getResponseBody.write(body, 0, sent)
+        }
+        ex.close()
+      } catch { case _: java.io.IOException => () } // the short body's close
+    })
+    server.start()
+    try {
+      val work = Files.createTempDirectory("cli-remote").toString
+      var status = -1
+      val out = captureOut {
+        status = Cli.run(Array("--remote", s"http://127.0.0.1:${server.getAddress.getPort}",
+          "gnosis", "1-2", "all-blocks", s"$work/out/remote.parquet",
+          "--state-dir", s"$work/state", "--cache-dir", s"$work/cache"))
+      }
+      assert(out.linesIterator.contains("processed 1 of 2 eras; 1 failed: 2"), out)
+      assert(status === 1)
+      // the intact era landed through the staged fan-out, its stage removed
+      val landed = new java.io.File(s"$work/out").list().toSeq
+      assert(landed.contains("remote_era_00001_blocks.parquet"), landed)
+      assert(!landed.exists(_.contains("__stage")), landed)
+    } finally server.stop(0)
   }
 
   test("--export-jdbc routes a dataset into a JDBC table (S15 path)") {

@@ -101,9 +101,16 @@ class ExportStateSpec extends AnyFunSuite {
     val ds2 = Seq((3L, 1.5)).toDF("slot", "x")
     for (ext <- Seq("parquet", "csv", "json")) {
       val base = s"$dir/$ext/out.$ext"
-      val counts = Sinks.exportSeparateFiles(Map("t1" -> ds1, "t2" -> ds2), base,
-        metadata = Map("era" -> "42", "network" -> "gnosis"))
+      var counts = Map.empty[String, Long]
+      val jobs = JobLog.during(spark) {
+        counts = Sinks.exportSeparateFiles(Map("t1" -> ds1, "t2" -> ds2), base,
+          metadata = Map("era" -> "42", "network" -> "gnosis"))
+          .map { case (t, (rows, _)) => t -> rows }
+      }
       assert(counts === Map("t1" -> 2L, "t2" -> 1L))
+      // the counts ride the write jobs: every job wrote, none read back
+      assert(jobs.size === 2 && JobLog.readOnly(jobs).isEmpty,
+        s"$ext export ran read-back jobs: $jobs")
       val summary = new String(Files.readAllBytes(Paths.get(s"$dir/$ext/out_SUMMARY.txt")), "UTF-8")
       assert(summary.contains("t1: 2 records") && summary.contains("t2: 1 records"))
       // round-trip

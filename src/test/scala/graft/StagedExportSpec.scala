@@ -2,47 +2,44 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.export.{Sinks, StagedExport}
+import graft.export.StagedExport
 import graft.operators.Normalizer
 import graft.queries.EraQueries
 
-/** The staged fan-out must be a pure execution-shape change: identical
-  * table contents to the direct export, and each table's stage scan must
-  * be NESTED-SCHEMA-PRUNED to its own body child — the property that makes
+/** The staged fan-out must be a pure execution-shape change: every
+  * table's contents and count equal the per-table reference computed
+  * straight from the decoded blocks, and each table's stage scan must be
+  * NESTED-SCHEMA-PRUNED to its own body child — the property that makes
   * the stage shape the 100 TB one (a tiny table's job reads only its own
   * column chunks, not the corpus). */
 class StagedExportSpec extends AnyFunSuite {
 
   private lazy val spark = TestSpark.spark
 
-  test("staged export equals the direct export table-for-table") {
+  test("staged export equals the per-table reference table-for-table") {
     val blocks = EraQueries.blocks(spark)
-    val directDir = java.nio.file.Files.createTempDirectory("graft-direct").toString
     val stagedDir = java.nio.file.Files.createTempDirectory("graft-staged").toString
     val stage = java.nio.file.Files.createTempDirectory("graft-stage").toString
-    val direct = Sinks.exportSeparateFiles(
-      Normalizer.allDatasets(blocks), s"$directDir/out.parquet")
     val staged = StagedExport.exportAll(blocks, s"$stage/blocks",
       s"$stagedDir/out.parquet")
-    assert(staged.keySet === direct.keySet)
+    assert(staged.keySet === Normalizer.datasetNames.toSet)
     staged.foreach { case (n, (rows, _)) =>
-      assert(rows === direct(n), s"$n row count differs")
+      assert(rows === Normalizer.dataset(blocks, n).count(), s"$n row count differs")
     }
-    Seq("blocks", "attestations", "withdrawals").foreach { t =>
-      val a = spark.read.parquet(s"$directDir/out_$t.parquet")
+    Normalizer.datasetNames.foreach { t =>
+      val a = Normalizer.dataset(blocks, t)
         .collect().toSeq.map(_.toSeq).sortBy(_.mkString("|"))
       val b = spark.read.parquet(s"$stagedDir/out_$t.parquet")
         .collect().toSeq.map(_.toSeq).sortBy(_.mkString("|"))
-      assert(a === b, s"$t contents differ between direct and staged export")
+      assert(a === b, s"$t contents differ between the reference and staged export")
     }
   }
 
   test("a child table's stage scan is pruned to its own body field") {
-    import spark.implicits._
     val stage = java.nio.file.Files.createTempDirectory("graft-stage-prune").toString
     EraQueries.blocks(spark).toDF().coalesce(4)
       .write.mode("overwrite").parquet(stage)
-    val staged = spark.read.parquet(stage).as[graft.model.DecodedBlock]
+    val staged = StagedExport.readStage(spark, stage)
     val scans = Normalizer.deposits(staged)
       .queryExecution.executedPlan.collect {
         case f: org.apache.spark.sql.execution.FileSourceScanExec => f
