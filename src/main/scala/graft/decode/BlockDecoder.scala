@@ -109,11 +109,6 @@ object BlockDecoder {
     * post-merge fork (the fork-variable fields all come later). */
   private val PayloadTsOffset = 428
 
-  /** Full-parse compatibility wrapper (the differential/golden specs drive
-    * this directly). */
-  private[decode] def parseBody(body: Array[Byte], fork: String): BlockBody =
-    parseBodyPruned(body, fork, AllSections)._1
-
   /** Body parse with section pruning; returns (body, payload timestamp —
     * 0 when absent/pre-merge, read from [[PayloadTsOffset]] when the
     * payload section is pruned away; block_parser.py:84-113's fallback
@@ -251,13 +246,9 @@ object BlockDecoder {
 
   // ── item parsers (F7–F15, F19) ──────────────────────────────────────────
   // Range-based: each parser reads its item as a (from, until) window of
-  // the section's backing array — no per-item slice copy (the old copied
-  // form survives as thin wrappers for the differential specs). Every
-  // bounds rule translates d.length → (until − from), so malformed-input
+  // the section's backing array — no per-item slice copy. Every bounds
+  // rule translates d.length → (until − from), so malformed-input
   // behavior is byte-identical to the slice-based parse.
-
-  private[decode] def parseAttestationData(d: Array[Byte]): AttestationData =
-    parseAttestationDataAt(d, 0)
 
   /** Caller guarantees 128 bytes at `from` (every call site slices or
     * checks a ≥228-byte item first — the old form received exactly the
@@ -271,10 +262,7 @@ object BlockDecoder {
       target = Checkpoint(readUint64(d, from + 88), hex(d, from + 96, from + 128)))
 
   /** forks/base.py:157-187 */
-  private[decode] def parseAttestation(d: Array[Byte]): Attestation =
-    parseAttestationAt(d, 0, d.length)
-
-  private def parseAttestationAt(d: Array[Byte], from: Int, until: Int): Attestation = {
+  private[decode] def parseAttestationAt(d: Array[Byte], from: Int, until: Int): Attestation = {
     val len = until - from
     if (len < 228) return null
     val bitsOffset = math.min(readUint32(d, from), len.toLong).toInt
@@ -285,10 +273,7 @@ object BlockDecoder {
   }
 
   /** forks/base.py:274-321 */
-  private[decode] def parseIndexedAttestation(d: Array[Byte]): IndexedAttestation =
-    parseIndexedAttestationAt(d, 0, d.length)
-
-  private def parseIndexedAttestationAt(d: Array[Byte], from: Int, until: Int): IndexedAttestation = {
+  private[decode] def parseIndexedAttestationAt(d: Array[Byte], from: Int, until: Int): IndexedAttestation = {
     val len = until - from
     if (len < 232) return null
     val indicesOffset = math.min(readUint32(d, from), len.toLong).toInt
@@ -303,10 +288,7 @@ object BlockDecoder {
   }
 
   /** forks/base.py:323-350 */
-  private[decode] def parseAttesterSlashing(d: Array[Byte]): AttesterSlashing =
-    parseAttesterSlashingAt(d, 0, d.length)
-
-  private def parseAttesterSlashingAt(d: Array[Byte], from: Int, until: Int): AttesterSlashing = {
+  private[decode] def parseAttesterSlashingAt(d: Array[Byte], from: Int, until: Int): AttesterSlashing = {
     val len = until - from
     if (len < 8) return null
     val off1 = math.min(readUint32(d, from), len.toLong).toInt
@@ -388,9 +370,6 @@ object BlockDecoder {
 
   /** forks/base.py:416-508; fork-conditional offsets incl. the Deneb 16-byte
     * blob-gas reservation and the equal-offset empty-transactions rule. */
-  private[decode] def parseExecutionPayload(d: Array[Byte], fork: String): Option[ExecutionPayload] =
-    parseExecutionPayloadAt(d, 0, d.length, fork)
-
   private def parseExecutionPayloadAt(d: Array[Byte], from: Int, until: Int,
       fork: String): Option[ExecutionPayload] = {
     try {
@@ -483,9 +462,6 @@ object BlockDecoder {
 
   /** forks/electra.py:24-124 — unique-offset sections with rightmost-owner
     * disambiguation for empty lists. */
-  private[decode] def parseExecutionRequests(d: Array[Byte]): ExecutionRequests =
-    parseExecutionRequestsAt(d, 0, d.length)
-
   private def parseExecutionRequestsAt(d: Array[Byte], from: Int, until: Int): ExecutionRequests = {
     val len = until - from
     if (len < 12) return ExecutionRequests(Nil, Nil, Nil)

@@ -314,7 +314,7 @@ object Compaction {
     }.toMap
 
   /** Compact every table of one network's warehouse subtree
-    * ([[StagedExport.exportWarehouse]] layout). */
+    * ([[IncrementalExporter.runWarehouse]] layout). */
   def compactWarehouse(spark: SparkSession, warehouseDir: String,
       network: String,
       targetBytes: Long = 128L << 20): Map[String, Seq[LeafReport]] =

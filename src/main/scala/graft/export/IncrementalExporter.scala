@@ -49,26 +49,38 @@ object IncrementalExporter {
       eras: Seq[Long], out: String, verb: String = "all-blocks",
       force: Boolean = false, dataRoot: Option[String] = None)(
       loadEra: Long => DataFrame): Seq[Long] = {
+    val cleanRoot =
+      dataRoot.getOrElse(Option(new java.io.File(out).getParent).getOrElse("."))
+    eachEra(state, network, eras, force)(state.cleanEraCompletely(cleanRoot, network, _)) { era =>
+      val eraOut = Sinks.eraOutputFilename(out, era.toInt)
+      val counts =
+        if (verb == "all-blocks") {
+          val stage = StagedExport.stageBeside(eraOut)
+          try StagedExport.exportAll(Normalizer.decodeBlocks(loadEra(era)), stage, eraOut)
+            .map { case (name, (rows, _)) => name -> rows }
+          finally StagedExport.dropStage(spark, stage)
+        } else // single-dataset verb: section-pruned decode, nothing to share
+          Map(verb -> Sinks.write(Normalizer.datasetPruned(loadEra(era), verb), eraOut))
+      (counts.keys.toSeq.sorted, counts.values.sum)
+    }
+  }
+
+  /** The per-era protocol both loops share: resume picks the eras not yet
+    * completed (`force` takes every requested era and `clean`s each one
+    * first), then per era record start → `exportEra` → record completion
+    * with the (datasets, total rows) it returns, or record the failure
+    * and move on. Returns the eras that completed, in order. */
+  private def eachEra(state: EraStateManager, network: String, eras: Seq[Long],
+      force: Boolean)(clean: Long => Unit)(
+      exportEra: Long => (Seq[String], Long)): Seq[Long] = {
     val todo = if (force) eras else state.determineErasToProcess(eras, network)
     val processed = Seq.newBuilder[Long]
     todo.foreach { era =>
-      if (force)
-        state.cleanEraCompletely(
-          dataRoot.getOrElse(Option(new java.io.File(out).getParent).getOrElse(".")),
-          network, era)
+      if (force) clean(era)
       state.recordEraStart(era, network)
       try {
-        val eraOut = Sinks.eraOutputFilename(out, era.toInt)
-        val counts =
-          if (verb == "all-blocks") {
-            val stage = StagedExport.stageBeside(eraOut)
-            try StagedExport.exportAll(Normalizer.decodeBlocks(loadEra(era)), stage, eraOut)
-              .map { case (name, (rows, _)) => name -> rows }
-            finally StagedExport.dropStage(spark, stage)
-          } else // single-dataset verb: section-pruned decode, nothing to share
-            Map(verb -> Sinks.write(Normalizer.datasetPruned(loadEra(era), verb), eraOut))
-        state.recordEraCompletion(era, network, counts.keys.toSeq.sorted,
-          counts.values.sum)
+        val (datasets, total) = exportEra(era)
+        state.recordEraCompletion(era, network, datasets, total)
         processed += era
       } catch {
         case e: Exception =>
@@ -86,10 +98,9 @@ object IncrementalExporter {
     * (`docs/CLICKHOUSE.md:340+`) are ONE store. Per era:
     *
     *  1. record start;
-    *  2. decode → a small columnar stage (the nested-pruning discipline
-    *     of [[StagedExport]], sized to one era) → the 17 per-table
-    *     extracts fan out concurrently, each landing as a DYNAMIC
-    *     partition overwrite ([[Sinks.overwriteEraPartitions]]) into
+    *  2. decode → a one-era columnar stage ([[StagedExport.stage]]) →
+    *     the 16 per-table extracts fan out concurrently, each landing as
+    *     a DYNAMIC partition overwrite ([[Sinks.overwriteEraPartitions]]) into
     *     `<warehouseDir>/<network>/<table>/era_number=N/` — exactly this
     *     era's directories are replaced, completed eras' files are never
     *     touched;
@@ -115,9 +126,8 @@ object IncrementalExporter {
     * directory — the loop's footprint is per-era, never per-archive. */
   def runWarehouse(spark: SparkSession, state: EraStateManager,
       network: String, eras: Seq[Long], warehouseDir: String,
-      parallelism: Int = 8, force: Boolean = false,
-      stageCodec: String = "zstd",
-      targetFileBytes: Long = Sinks.whTargetFileBytes)(
+      force: Boolean = false,
+      targetFileBytes: Long = 512L * 1024L * 1024L)(
       loadEra: Long => DataFrame): Seq[Long] = {
     // every filesystem touch goes through the Hadoop FileSystem bound to
     // the warehouse URI — the loop's own contract is "any store Spark can
@@ -138,66 +148,51 @@ object IncrementalExporter {
       val p = hp(s"$netDir/$n/era_number=$era")
       if (fs.exists(p)) fs.delete(p, true)
     }
-    val todo = if (force) eras else state.determineErasToProcess(eras, network)
-    val processed = Seq.newBuilder[Long]
     // measured bytes/row per table, updated from each completed era's own
     // on-disk output — the `maxRecordsPerFile` derivation (guide §6): the
     // first era writes unconstrained (nothing measured yet), every later
-    // era caps records/file at targetFileBytes / measured bytes-per-row,
-    // so a multi-GB hot-table era splits into ~target-sized files instead
-    // of whatever the stage's task count dictated. Self-tuning: the
-    // estimate follows the corpus as row width drifts across eras.
+    // era caps records/file at targetFileBytes (512 MB by default, inside
+    // the guide's 128 MB–1 GB band) / measured bytes-per-row, so a
+    // multi-GB hot-table era splits into ~target-sized files instead of
+    // whatever the stage's task count dictated. Self-tuning: the estimate
+    // follows the corpus as row width drifts across eras.
     var rowBytes = Map.empty[String, Double]
-    try {
-      todo.foreach { era =>
-        if (force) dropEraPartitions(era)
-        state.recordEraStart(era, network)
-        try {
-          Normalizer.decodeBlocks(loadEra(era)).toDF().coalesce(4)
-            .write.mode("overwrite").option("compression", stageCodec).parquet(stage)
-          val tables = StagedExport.networkTables(StagedExport.readStage(spark, stage), network)
-          dropEraPartitions(era)
-          // per-table counts ride the write jobs as observed metrics
-          // (Sinks.writeCounted), so completion bookkeeping costs ZERO
-          // post-write jobs (WarehouseResumeSpec asserts no read-back
-          // count job ever runs). wide_blocks is still EXCLUDED from the
-          // completion record: it re-shapes the same blocks, and counting
-          // it would make total_records diverge from the file-mode loop's
-          // accounting for the same era.
-          val written = Sinks.runQuiescent(spark, parallelism, tables.map {
-            case (name, df) => () =>
-              val part = s"$netDir/$name/era_number=$era"
-              Sinks.writeCounted(df)(Sinks.overwriteEraPartitions(_, s"$netDir/$name",
-                rowBytes.get(name)
-                  .map(b => math.max(1L, (targetFileBytes / b).toLong))
-                  .getOrElse(0L))) {
-                if (fs.exists(hp(part))) spark.read.parquet(part).count() else 0L
-              }
-          })
-          val counts = tables.map(_._1).zip(written)
-            .filter(_._1 != "wide_blocks").toMap
-          rowBytes ++= counts.flatMap { case (name, rows) =>
-            if (rows <= 0) None
-            else {
-              val p = hp(s"$netDir/$name/era_number=$era")
-              val bytes =
-                if (fs.exists(p)) fs.getContentSummary(p).getLength else 0L
-              if (bytes > 0) Some(name -> bytes.toDouble / rows) else None
-            }
+    try eachEra(state, network, eras, force)(dropEraPartitions) { era =>
+      val tables = StagedExport.networkTables(
+        StagedExport.stage(Normalizer.decodeBlocks(loadEra(era)), stage), network)
+      dropEraPartitions(era)
+      // per-table counts ride the write jobs as observed metrics
+      // (Sinks.writeCounted), so completion bookkeeping costs ZERO
+      // post-write jobs (WarehouseResumeSpec asserts no read-back count
+      // runs). wide_blocks is still EXCLUDED from the completion record:
+      // it re-shapes the same blocks, and counting it would make
+      // total_records diverge from the file-mode loop's accounting for
+      // the same era.
+      val written = Sinks.runQuiescent(spark, tables.map {
+        case (name, df) => () =>
+          val part = s"$netDir/$name/era_number=$era"
+          Sinks.writeCounted(df)(Sinks.overwriteEraPartitions(_, s"$netDir/$name",
+            rowBytes.get(name)
+              .map(b => math.max(1L, (targetFileBytes / b).toLong))
+              .getOrElse(0L))) {
+            if (fs.exists(hp(part))) spark.read.parquet(part).count() else 0L
           }
-          state.recordEraCompletion(era, network,
-            counts.filter(_._2 > 0).keys.toSeq.sorted, counts.values.sum)
-          processed += era
-        } catch {
-          case e: Exception =>
-            state.recordEraFailure(era, network, String.valueOf(e.getMessage))
-            System.err.println(s"era $era warehouse export failed: ${e.getMessage}")
+      })
+      val counts = tables.map(_._1).zip(written)
+        .filter(_._1 != "wide_blocks").toMap
+      rowBytes ++= counts.flatMap { case (name, rows) =>
+        if (rows <= 0) None
+        else {
+          val p = hp(s"$netDir/$name/era_number=$era")
+          val bytes =
+            if (fs.exists(p)) fs.getContentSummary(p).getLength else 0L
+          if (bytes > 0) Some(name -> bytes.toDouble / rows) else None
         }
       }
+      (counts.filter(_._2 > 0).keys.toSeq.sorted, counts.values.sum)
     } finally {
       val p = hp(stage)
       if (fs.exists(p)) fs.delete(p, true)
     }
-    processed.result()
   }
 }

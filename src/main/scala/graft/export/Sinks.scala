@@ -26,8 +26,8 @@ import org.apache.spark.sql.functions.{count, lit}
  *
  * Each output `<name>.<ext>` is a directory of part files — the
  * distributed-native shape. At 100 TB one file per sink is a non-goal;
- * downstream consumers read the directory. `singleFile = true` coalesces
- * to 1 partition for small-parity exports.
+ * downstream consumers read the directory; the opt-in `--parity`
+ * envelope ([[Sinks.writeWithEnvelope]]) is the one single-file shape.
  */
 object Sinks {
 
@@ -60,11 +60,10 @@ object Sinks {
     * itself ([[writeCounted]]): the data is computed exactly once, no read
     * job follows the write, and the count is the rows actually committed
     * even for a nondeterministic frame. */
-  def write(df: DataFrame, path: String, singleFile: Boolean = false,
+  def write(df: DataFrame, path: String,
       metadata: Map[String, String] = Map.empty): Long = {
     val fmt = formatOf(path)
-    val n = writeCounted(if (singleFile) df.coalesce(1) else df)(
-      writeAs(_, fmt, path))(readBack(df, fmt, path))
+    val n = writeCounted(df)(writeAs(_, fmt, path))(readBack(df, fmt, path))
     if (metadata.nonEmpty) writeMetadataSidecar(path, metadata + ("rows" -> n.toString))
     n
   }
@@ -105,14 +104,12 @@ object Sinks {
     * era-ranged query prunes to its directories BEFORE any file is opened
     * (`spark.read.parquet(path).filter(era_number === n)` lists only that
     * partition — pruning-tested in `ExportStateSpec`). A 100k-era archive
-    * is 100k directories per table; a point query opens one. */
-  def writePartitionedByEra(df: DataFrame, path: String): Unit =
-    df.write.mode("overwrite").partitionBy("era_number").parquet(path)
-
-  /** The INCREMENTAL write into the same layout: overwrite ONLY the era
-    * partitions present in `df`, leaving every other era's directories
-    * untouched (`partitionOverwriteMode=dynamic`, set per-write so the
-    * session default stays static). This is what makes the per-era loop's
+    * is 100k directories per table; a point query opens one.
+    *
+    * The write is INCREMENTAL: it overwrites ONLY the era partitions
+    * present in `df`, leaving every other era's directories untouched
+    * (`partitionOverwriteMode=dynamic`, set per-write so the session
+    * default stays static). This is what makes the per-era loop's
     * re-processing idempotent at the warehouse: a crashed era's retry
     * replaces exactly its own partition, and completed eras' files are
     * never rewritten — [[IncrementalExporter.runWarehouse]]'s
@@ -128,15 +125,6 @@ object Sinks {
      else w)
       .partitionBy("era_number").parquet(path)
   }
-
-  /** Target output-file size for the warehouse loop (guide §6: aim for
-    * 128 MB–1 GB parquet files). Overridable for tests and deployments via
-    * SPARK_GRAFT_WH_TARGET_FILE_MB. */
-  def whTargetFileBytes: Long =
-    sys.env.get("SPARK_GRAFT_WH_TARGET_FILE_MB")
-      .flatMap(v => scala.util.Try(v.toLong).toOption)
-      .map(_ * 1024L * 1024L)
-      .getOrElse(512L * 1024L * 1024L)
 
   /** S11/S13 exact-parity single-file export: the reference's INLINE
     * metadata envelope — JSONL metadata as the first line
@@ -215,7 +203,7 @@ object Sinks {
 
   /** S16: one output per dataset + SUMMARY.txt
     * (parquet_exporter.py:71-103, csv_exporter.py:47-76), with the table
-    * writes submitted CONCURRENTLY from a bounded pool ([[runQuiescent]]).
+    * writes submitted CONCURRENTLY, one pool thread each ([[runQuiescent]]).
     * Returns per-table (rows, seconds).
     *
     * The 15 child tables are independent jobs, and most of them are tiny:
@@ -230,15 +218,13 @@ object Sinks {
   def exportSeparateFiles(
       datasets: Map[String, DataFrame],
       baseOutput: String,
-      metadata: Map[String, String] = Map.empty,
-      singleFile: Boolean = false,
-      parallelism: Int = 8): Map[String, (Long, Double)] = {
+      metadata: Map[String, String] = Map.empty): Map[String, (Long, Double)] = {
     val entries = datasets.toSeq.sortBy(_._1)
     val spark = entries.head._2.sparkSession
-    val timed = entries.map(_._1).zip(runQuiescent(spark, parallelism, entries.map {
+    val timed = entries.map(_._1).zip(runQuiescent(spark, entries.map {
       case (name, df) => () => {
         val t0 = System.nanoTime()
-        val rows = write(df, datasetFilename(baseOutput, name), singleFile, metadata)
+        val rows = write(df, datasetFilename(baseOutput, name), metadata)
         (rows, (System.nanoTime() - t0) / 1e9)
       }
     }))
@@ -252,7 +238,8 @@ object Sinks {
     timed.toMap
   }
 
-  /** Run `tasks` on a bounded pool and return their results in task order;
+  /** Run `tasks` concurrently, one pool thread each (a fan-out is at most
+    * the 16 warehouse tables), and return their results in task order;
     * on the FIRST failure make the fan-out quiescent before rethrowing.
     * Interrupting a submitter thread only unblocks its job await — the
     * already-launched Spark job keeps running and emitting files — so
@@ -260,12 +247,10 @@ object Sinks {
     * cancels the group (killing in-flight tasks), cancels the undone
     * futures, and drains the pool. A caller that records the failure and
     * starts cleaning up therefore never races stray write jobs. Shared by
-    * [[exportSeparateFiles]], [[graft.export.StagedExport.exportWarehouse]]
-    * and [[IncrementalExporter.runWarehouse]]. */
+    * [[exportSeparateFiles]] and [[IncrementalExporter.runWarehouse]]. */
   private[export] def runQuiescent[T](spark: org.apache.spark.sql.SparkSession,
-      parallelism: Int, tasks: Seq[() => T]): Seq[T] = {
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(parallelism, math.max(1, tasks.size)))
+      tasks: Seq[() => T]): Seq[T] = {
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(math.max(1, tasks.size))
     val group = s"graft-export-${java.util.UUID.randomUUID()}"
     try {
       val futures = tasks.map { t =>

@@ -8,10 +8,10 @@ import graft.operators.Normalizer
 /**
  * Staged 15-table fan-out: materialize the decoded blocks ONCE as parquet,
  * then run the per-table exports as concurrent column-pruned scans of the
- * stage. This is the one era fan-out core: the CLI's `all-blocks
+ * stage. [[stage]] is the one stage write: the CLI's `all-blocks
  * --separate`, the incremental loop's `all-blocks` verb and the bench ETL
- * all call [[exportAll]], and the warehouse writers share its stage-then-
- * fan-out discipline.
+ * call [[exportAll]] on top of it, and the per-era warehouse loop
+ * ([[IncrementalExporter.runWarehouse]]) stages each era through it.
  *
  * Why staging beats caching (measured on the 98k-block bench corpus:
  * cached decode + concurrent writes 1.9–3.5k blocks/s, parquet stage
@@ -31,23 +31,26 @@ import graft.operators.Normalizer
  */
 object StagedExport {
 
+  /** Write `blocks` to `dir` as the decode-once stage and return it read
+    * back. zstd: ~2× smaller than snappy for hex-heavy block payloads at
+    * negligible extra CPU — halves both the write-back pressure staging
+    * adds and the bytes every fan-out scan re-reads. Coalesced to 32
+    * files, which also bounds each table's output file count; a single
+    * era is one scan partition, so the warehouse loop's stage is one file. */
+  def stage(blocks: Dataset[DecodedBlock], dir: String): Dataset[DecodedBlock] = {
+    blocks.toDF().coalesce(32)
+      .write.mode("overwrite").option("compression", "zstd").parquet(dir)
+    readStage(blocks.sparkSession, dir)
+  }
+
   /** Stage `blocks` under `stageDir` and export all 15 normalized tables
     * to `baseOutput` (reference naming via [[Sinks.datasetFilename]]).
     * Returns per-table (rows, seconds), the rows counted by each table's
-    * own write job. `stageFiles` bounds both stage fan-in and per-table
-    * output file count. The stage is left in place: the caller owns its
+    * own write job. The stage is left in place: the caller owns its
     * lifetime ([[stageBeside]] + [[dropStage]] for user-facing paths). */
   def exportAll(blocks: Dataset[DecodedBlock], stageDir: String,
-      baseOutput: String, parallelism: Int = 16,
-      stageFiles: Int = 32, stageCodec: String = "zstd"): Map[String, (Long, Double)] = {
-    // zstd stage: ~2× smaller than snappy for hex-heavy block payloads at
-    // negligible extra CPU — halves both the write-back pressure staging
-    // adds and the bytes every fan-out scan re-reads
-    blocks.toDF().coalesce(stageFiles)
-      .write.mode("overwrite").option("compression", stageCodec).parquet(stageDir)
-    Sinks.exportSeparateFiles(Normalizer.allDatasets(readStage(blocks.sparkSession, stageDir)),
-      baseOutput, parallelism = parallelism)
-  }
+      baseOutput: String): Map[String, (Long, Double)] =
+    Sinks.exportSeparateFiles(Normalizer.allDatasets(stage(blocks, stageDir)), baseOutput)
 
   /** A stage written from `Dataset[DecodedBlock]`, read with the schema
     * it was written with: parquet schema inference would launch a footer-
@@ -72,53 +75,9 @@ object StagedExport {
     if (fs.exists(p)) fs.delete(p, true)
   }
 
-  /** Stage once, then write the full AT-REST WAREHOUSE: every normalized
-    * table (plus the wide shape) as an era-partitioned parquet directory
-    * `<warehouseDir>/<network>/<table>/era_number=N/` — the
-    * [[Sinks.writePartitionedByEra]] layout
-    * [[graft.queries.EraViews]]`.registerWarehouse` binds SQL views to,
-    * closing the reference's paste-SQL-against-exported-tables contract
-    * (docs/CLICKHOUSE.md:340+ assumes ClickHouse tables at rest). Same
-    * staged fan-out discipline as [[exportAll]]: one columnar stage, then
-    * concurrent nested-schema-pruned partitioned writes from a bounded
-    * pool, quiescent on failure.
-    *
-    * Multi-network: the reference's state layer keys every row on network
-    * (`era_state_manager.py:350-377`), so one store holds many networks.
-    * Here each network gets its own subtree because `era_number` is
-    * derived arithmetically from the NETWORK'S slot geometry — the
-    * per-(network, table) writes all fan out of the one shared stage. */
-  def exportWarehouse(blocks: Dataset[DecodedBlock], stageDir: String,
-      warehouseDir: String, parallelism: Int = 16,
-      stageFiles: Int = 32, stageCodec: String = "zstd"): Unit = {
-    val spark = blocks.sparkSession
-    import spark.implicits._
-    // stage partitioned BY NETWORK: with a mixed stage every per-(network,
-    // table) extract would scan 100% of the stage bytes and filter the
-    // other networks out row by row; partitioning lets each extract's
-    // network filter prune to its own subdirectory — the same discipline
-    // the stage's nested-schema pruning applies to columns. Single-network
-    // corpora pay one directory level, nothing else.
-    blocks.toDF().coalesce(stageFiles)
-      .write.mode("overwrite").option("compression", stageCodec)
-      .partitionBy("network").parquet(stageDir)
-    val staged = spark.read.parquet(stageDir).as[DecodedBlock]
-    val nets = staged.select(org.apache.spark.sql.functions.col("network"))
-      .distinct().collect().map(_.getString(0)).sorted
-    require(nets.nonEmpty, "warehouse export needs a non-empty corpus")
-    val tables = nets.toSeq.flatMap { net =>
-      val mine = staged.filter(org.apache.spark.sql.functions.col("network") === net)
-      networkTables(mine, net).map { case (name, df) => (net, name, df) }
-    }
-    Sinks.runQuiescent(spark, parallelism, tables.map { case (net, name, df) =>
-      () => Sinks.writePartitionedByEra(df, s"$warehouseDir/$net/$name")
-    })
-    ()
-  }
-
-  /** The warehouse's table set — the 16 normalized datasets plus the wide
-    * shape. ONE definition shared by the exporters and the incremental
-    * loop so a table rename can't drift across them. */
+  /** The warehouse's table set — the 15 normalized datasets plus the wide
+    * shape. ONE definition shared by the warehouse loop, compaction and
+    * the specs so a table rename can't drift across them. */
   private[graft] val warehouseTableNames: Seq[String] =
     Normalizer.datasetNames :+ "wide_blocks"
 
@@ -130,8 +89,10 @@ object StagedExport {
     * slot-equi join whose build side is the whole block archive at
     * 100 TB. The identity is per-network (the slot geometry comes from
     * [[graft.config.Networks]]); decode-vs-arithmetic agreement is
-    * spec-pinned in `EraWarehouseSpec`. Shared by the full-corpus
-    * [[exportWarehouse]] and the per-era
+    * spec-pinned in `EraWarehouseSpec`. Multi-network: the reference's
+    * state layer keys every row on network (`era_state_manager.py:350-377`),
+    * so one store holds many networks, each in its own subtree because the
+    * slot geometry is the network's. Used by the per-era
     * [[IncrementalExporter.runWarehouse]] loop. */
   private[export] def networkTables(blocks: Dataset[DecodedBlock],
       network: String): Seq[(String, org.apache.spark.sql.DataFrame)] = {

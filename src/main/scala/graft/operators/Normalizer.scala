@@ -34,25 +34,8 @@ object Normalizer {
     "blob_commitments", "deposit_requests", "withdrawal_requests",
     "consolidation_requests")
 
-  /** Decode raw era records (format("era") output) into the nested block
-    * Dataset. Narrow mapPartitions — decode happens once; all 15 child
-    * tables project from this (cache it when fanning out to all sinks). */
-  def decodeBlocks(records: DataFrame): Dataset[DecodedBlock] = {
-    val spark = records.sparkSession
-    import spark.implicits._
-    records
-      .filter(col("record_type") === "block")
-      .select("slot", "data", "network", "era_number", "source_file")
-      .as[(Long, Array[Byte], String, Long, String)]
-      .mapPartitions { it =>
-        it.flatMap { case (slot, data, net, era, file) =>
-          BlockDecoder.decode(data, slot, Networks(net), era, file)
-        }
-      }
-  }
-
   /** Body sections each table's projection actually reads — the
-    * column-pruning map for [[decodeBlocksPruned]] (the header, eth1 data,
+    * column-pruning map for [[decodeBlocks]] (the header, eth1 data,
     * graffiti, randao, and timestamp are always decoded; `blocks` needs no
     * variable section at all). */
   val sectionsFor: Map[String, Set[String]] = Map(
@@ -72,18 +55,23 @@ object Normalizer {
     "withdrawal_requests" -> Set("execution_requests"),
     "consolidation_requests" -> Set("execution_requests"))
 
-  /** [[decodeBlocks]] with the body parse PRUNED to what `tables` read —
+  /** Decode raw era records (format("era") output) into the nested block
+    * Dataset. Narrow mapPartitions — decode happens once; all 15 child
+    * tables project from this (stage it when fanning out to all sinks).
+    *
+    * `tables` PRUNES the body parse to the sections those tables read —
     * decode-side column pruning, the SURVEY.md §4 optional upgrade the
     * reference's compute-all-then-select (processor.py:401-404) never had:
     * a single-table extract skips the other 14 sections' parse work
     * entirely (on attestation-heavy or payload-heavy forks that is most of
-    * the decode CPU). The returned Dataset is ONLY valid for the requested
-    * tables — every other body field is deliberately empty; use
-    * [[decodeBlocks]] when fanning out. Equality with the full decode on
+    * the decode CPU). The default, every table, is the full decode. A
+    * pruned Dataset is ONLY valid for the requested tables — every other
+    * body field is deliberately empty. Equality with the full decode on
     * the requested tables is pinned by `SectionPruningSpec`; see
     * [[graft.decode.BlockDecoder.decode]] for the corrupt-pruned-section
     * contract. */
-  def decodeBlocksPruned(records: DataFrame, tables: Set[String]): Dataset[DecodedBlock] = {
+  def decodeBlocks(records: DataFrame,
+      tables: Set[String] = datasetNames.toSet): Dataset[DecodedBlock] = {
     val unknown = tables.diff(datasetNames.toSet)
     require(unknown.isEmpty, s"Unknown datasets: ${unknown.mkString(", ")}")
     val sections = tables.flatMap(sectionsFor)
@@ -104,7 +92,7 @@ object Normalizer {
     * decode — the single-table extract path (CLI `graft <era> attestations
     * out.parquet`, the incremental loop's single-dataset verb). */
   def datasetPruned(records: DataFrame, name: String): DataFrame =
-    dataset(decodeBlocksPruned(records, Set(name)), name)
+    dataset(decodeBlocks(records, Set(name)), name)
 
   /** Extract one named dataset; lazy evaluation prunes everything else —
     * unlike the reference's compute-all-then-select
@@ -400,7 +388,7 @@ object Normalizer {
     wideBlocksWithEra(blocks).drop("era_number")
 
   /** [[wideBlocks]] + the `era_number` partition key appended — the shape
-    * the at-rest warehouse stores ([[graft.export.StagedExport.exportWarehouse]]
+    * the at-rest warehouse stores ([[graft.export.IncrementalExporter.runWarehouse]]
     * partitions every table by era; the wide projection is the only one
     * that doesn't already carry the key). */
   def wideBlocksWithEra(blocks: Dataset[DecodedBlock]): DataFrame =

@@ -112,7 +112,7 @@ object EraQueries {
       // the payload-timestamp fixed-offset read on post-merge forks.
       "era_point_lookup" -> ((s, _) => {
         val dir = graft.testkit.EraFixtures.ensureGenerated()
-        Normalizer.blocksTable(Normalizer.decodeBlocksPruned(
+        Normalizer.blocksTable(Normalizer.decodeBlocks(
           s.read.format("era").load(dir).filter(col("slot") === 98300L),
           Set("blocks")))
       }),
@@ -123,7 +123,7 @@ object EraQueries {
       // indexed-miss path is oracle-checked too.
       "era_point_lookup_multi" -> ((s, _) => {
         val dir = graft.testkit.EraFixtures.ensureGenerated()
-        Normalizer.blocksTable(Normalizer.decodeBlocksPruned(
+        Normalizer.blocksTable(Normalizer.decodeBlocks(
           s.read.format("era").load(dir)
             .filter(col("slot").isin(300L, 98301L, 16383000L)),
           Set("blocks")))
@@ -137,7 +137,7 @@ object EraQueries {
       // altair fixture block — the oracle checks the probe+skip shape.
       "era_slot_range" -> ((s, _) => {
         val dir = graft.testkit.EraFixtures.ensureGenerated()
-        Normalizer.blocksTable(Normalizer.decodeBlocksPruned(
+        Normalizer.blocksTable(Normalizer.decodeBlocks(
           s.read.format("era").load(dir)
             .filter(col("slot") >= 98299L && col("slot") <= 98301L),
           Set("blocks")))

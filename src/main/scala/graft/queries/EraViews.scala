@@ -74,7 +74,7 @@ object EraViews {
   }
 
   /** Bind the SAME views to an AT-REST warehouse directory — the layout
-    * [[graft.export.StagedExport.exportWarehouse]] writes (one
+    * [[graft.export.IncrementalExporter.runWarehouse]] writes (one
     * era-partitioned parquet directory per table under
     * `dir/<network>`). This is
     * the other half of the reference's SQL contract: its users paste SQL
@@ -103,7 +103,8 @@ object EraViews {
       val path = s"$dir/$network/$name"
       require(fs.exists(new org.apache.hadoop.fs.Path(path)),
         s"warehouse table missing at $path — expected the " +
-          "StagedExport.exportWarehouse layout (<dir>/<network>/<table>/era_number=N/)")
+          "warehouse layout IncrementalExporter.runWarehouse writes " +
+          "(<dir>/<network>/<table>/era_number=N/)")
       // read with the EXPLICIT canonical schema (+ the era_number partition
       // key): schema inference would (a) pay a footer-listing pass per
       // table per registration and (b) throw "Unable to infer schema" for
@@ -130,8 +131,9 @@ object EraViews {
     s.sql(text)
   }
 
-  /** Lazily-built fixture WAREHOUSE (the exportWarehouse layout in a temp
-    * directory, one per JVM, removed on exit): the `era_sql_wh_*` queries
+  /** Lazily-built fixture WAREHOUSE (the fixture eras landed by
+    * [[landWarehouse]] in a temp directory, one per JVM, removed on
+    * exit): the `era_sql_wh_*` queries
     * run the SAME ClickHouse-derived texts against the AT-REST views, so
     * the driver's oracle gate checks the full contract end to end —
     * decode → partitioned export → SQL over the exported tables — not
@@ -140,12 +142,31 @@ object EraViews {
   private def warehouseDir(s: SparkSession): String = synchronized {
     if (fixtureWarehouse == null) {
       val root = java.nio.file.Files.createTempDirectory("graft-wh").toString
-      graft.export.StagedExport.exportWarehouse(EraQueries.blocks(s),
-        s"$root/stage", s"$root/wh", parallelism = 8, stageFiles = 8)
       sys.addShutdownHook(graft.Bench.deleteRecursively(root))
+      landWarehouse(s.read.format("era").load(graft.testkit.EraFixtures.ensureGenerated()),
+        s"$root/wh")
       fixtureWarehouse = s"$root/wh"
     }
     fixtureWarehouse
+  }
+
+  /** Land every era of the raw era `records` into the warehouse at `wh`
+    * through the per-era loop ([[graft.export.IncrementalExporter.runWarehouse]]),
+    * one call per network, on a fresh state log that is deleted after. */
+  private[graft] def landWarehouse(records: DataFrame, wh: String): Unit = {
+    import org.apache.spark.sql.functions.col
+    val spark = records.sparkSession
+    val state = java.nio.file.Files.createTempDirectory("graft-wh-state").toString
+    try records.select("network", "era_number").distinct().collect()
+      .groupBy(_.getString(0)).toSeq.sortBy(_._1).foreach { case (net, rows) =>
+        val eras = rows.map(_.getLong(1)).sorted.toSeq
+        val done = graft.export.IncrementalExporter.runWarehouse(spark,
+          new graft.export.EraStateManager(spark, state), net, eras, wh) { era =>
+          records.filter(col("network") === net && col("era_number") === era)
+        }
+        require(done == eras, s"$net: landed eras $done of $eras")
+      }
+    finally graft.Bench.deleteRecursively(state)
   }
 
   private def sqlWarehouse(s: SparkSession, text: String): DataFrame = {

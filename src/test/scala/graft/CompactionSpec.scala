@@ -107,9 +107,9 @@ class CompactionSpec extends AnyFunSuite {
 
   test("compacting a real fixture warehouse is invisible to the SQL surface") {
     val root = java.nio.file.Files.createTempDirectory("compact-wh").toString
-    graft.export.StagedExport.exportWarehouse(
-      graft.queries.EraQueries.blocks(spark),
-      s"$root/stage", s"$root/wh", parallelism = 8, stageFiles = 8)
+    graft.queries.EraViews.landWarehouse(
+      spark.read.format("era").load(graft.testkit.EraFixtures.ensureGenerated()),
+      s"$root/wh")
     val wh = s"$root/wh"
     val net = fs(wh).listStatus(new Path(wh)).filter(_.isDirectory)
       .map(_.getPath.getName).filterNot(_.startsWith("_")).head

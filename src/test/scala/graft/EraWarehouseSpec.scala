@@ -5,13 +5,13 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.export.StagedExport
 import graft.queries.{EraQueries, EraViews}
+import graft.testkit.{EraFixtures, MainnetEraFixture}
 
 /** The at-rest half of the SQL contract: a reference user pastes SQL
   * against the EXPORTED tables, not an in-session decode. This spec writes
-  * the full era-partitioned warehouse once
-  * ([[StagedExport.exportWarehouse]]), binds the views to it
+  * the full era-partitioned warehouse once through the per-era loop
+  * ([[EraViews.landWarehouse]]), binds the views to it
   * ([[EraViews.registerWarehouse]]), and asserts
   *  - the `era_sql_*` texts return the SAME rows from the warehouse as
   *    from the decode-backed views;
@@ -25,11 +25,12 @@ class EraWarehouseSpec extends AnyFunSuite {
 
   private lazy val spark = TestSpark.spark
 
-  /** One warehouse for the whole suite, staged + written once. */
+  private def records(dirs: String*) = spark.read.format("era").load(dirs: _*)
+
+  /** One warehouse for the whole suite, landed once. */
   private lazy val warehouseDir: String = {
     val root = Files.createTempDirectory("era-warehouse").toString
-    StagedExport.exportWarehouse(EraQueries.blocks(spark),
-      s"$root/stage", s"$root/wh", parallelism = 8, stageFiles = 8)
+    EraViews.landWarehouse(records(EraFixtures.ensureGenerated()), s"$root/wh")
     s"$root/wh"
   }
 
@@ -123,8 +124,9 @@ class EraWarehouseSpec extends AnyFunSuite {
     val root = Files.createTempDirectory("era-warehouse-multinet").toString
     val gnosis = EraQueries.blocks(spark)
     val mainnet = EraQueries.mainnetBlocks(spark)
-    StagedExport.exportWarehouse(gnosis.unionByName(mainnet),
-      s"$root/stage", s"$root/wh", parallelism = 8, stageFiles = 4)
+    EraViews.landWarehouse(
+      records(EraFixtures.ensureGenerated(), MainnetEraFixture.ensureGenerated()),
+      s"$root/wh")
     // ambiguous auto-detect must refuse, not guess
     val e = intercept[IllegalArgumentException] {
       EraViews.registerWarehouse(spark, s"$root/wh")
@@ -153,14 +155,15 @@ class EraWarehouseSpec extends AnyFunSuite {
 
   test("a warehouse with a legitimately EMPTY table still binds and queries") {
     // a phase0-only corpus has no withdrawals/bls_changes/execution
-    // requests — partitionBy of zero rows writes only _SUCCESS, and the
+    // requests — such a table's directory holds no part files, and the
     // explicit-schema read must bind those tables as empty views instead
     // of dying in schema inference
     val root = Files.createTempDirectory("era-warehouse-empty").toString
     val phase0 = EraQueries.blocks(spark).filter(col("era_number") === 0L)
     assert(phase0.count() > 0, "fixture corpus must contain era-0 (phase0) blocks")
-    StagedExport.exportWarehouse(phase0, s"$root/stage", s"$root/wh",
-      parallelism = 8, stageFiles = 4)
+    EraViews.landWarehouse(
+      records(EraFixtures.ensureGenerated()).filter(col("era_number") === 0L),
+      s"$root/wh")
     EraViews.registerWarehouse(spark, s"$root/wh")
     val w = spark.sql("SELECT count(*) AS n FROM withdrawals").head().getLong(0)
     assert(w === 0L, "phase0 corpus must yield an empty withdrawals table")

@@ -16,7 +16,7 @@ class ExportParallelSpec extends AnyFunSuite {
     val blocks = EraQueries.blocks(spark)
     val dir = java.nio.file.Files.createTempDirectory("graft-exp-par").toString
     val timed = graft.export.Sinks.exportSeparateFiles(
-      Normalizer.allDatasets(blocks), s"$dir/out.parquet", parallelism = 8)
+      Normalizer.allDatasets(blocks), s"$dir/out.parquet")
     assert(timed.keySet === Normalizer.datasetNames.toSet)
     val want = Normalizer.datasetNames.map(t => t -> Normalizer.dataset(blocks, t).count()).toMap
     timed.foreach { case (name, (rows, sec)) =>

@@ -27,7 +27,7 @@ class ExportStateSpec extends AnyFunSuite {
     val blocks = graft.queries.EraQueries.blocks(spark).toDF()
       .select(col("slot"), col("proposer_index"), col("version"), col("era_number"))
     val out = tmpDir("era-part")
-    Sinks.writePartitionedByEra(blocks, s"$out/blocks")
+    Sinks.overwriteEraPartitions(blocks, s"$out/blocks")
     val eras = blocks.select(col("era_number")).distinct()
       .collect().map(_.getLong(0)).sorted
     assert(eras.length > 1, "fixture corpus must span multiple eras for pruning to mean anything")
@@ -55,7 +55,7 @@ class ExportStateSpec extends AnyFunSuite {
     val blocks = graft.queries.EraQueries.blocks(spark).toDF()
       .select(col("slot"), col("proposer_index"), col("era_number"))
     val out = tmpDir("era-dpp")
-    Sinks.writePartitionedByEra(blocks, s"$out/blocks")
+    Sinks.overwriteEraPartitions(blocks, s"$out/blocks")
     val eras = blocks.select(col("era_number")).distinct()
       .collect().map(_.getLong(0)).sorted
     import spark.implicits._

@@ -1,9 +1,12 @@
 package graft
 
 import scala.collection.concurrent.TrieMap
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** The jobs a piece of code launches, each with its call site (the name of
   * its result stage) and the bytes its tasks wrote. A job that wrote
@@ -40,4 +43,26 @@ object JobLog {
 
   /** The jobs among `jobs` that wrote nothing. */
   def readOnly(jobs: Seq[Job]): Seq[Job] = jobs.filter(_.bytesWritten == 0)
+
+  /** The action name (`QueryExecutionListener`'s funcName: "count",
+    * "collect", "command" for a file write, …) of every query that ended
+    * on `spark` while `body` runs. Unlike bytes written, this tells a
+    * read-back `count` from a write that wrote nothing, such as an empty
+    * table's partitioned write. */
+  def actions(spark: SparkSession)(body: => Unit): Seq[String] = {
+    val names = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        names.add(funcName)
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit =
+        names.add(funcName)
+    }
+    spark.listenerManager.register(listener)
+    try body
+    finally {
+      org.apache.spark.graftutil.ListenerDrain.drain(spark.sparkContext)
+      spark.listenerManager.unregister(listener)
+    }
+    names.asScala.toSeq
+  }
 }

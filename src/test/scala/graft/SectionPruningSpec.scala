@@ -45,7 +45,7 @@ class SectionPruningSpec extends AnyFunSuite {
       .load(graft.testkit.MainnetEraFixture.ensureGenerated())
     val want = sortedRows(Normalizer.blocksTable(Normalizer.decodeBlocks(recs)))
     val got = sortedRows(Normalizer.blocksTable(
-      Normalizer.decodeBlocksPruned(recs, Set("blocks"))))
+      Normalizer.decodeBlocks(recs, Set("blocks"))))
     assert(got === want)
   }
 
@@ -130,9 +130,14 @@ class SectionPruningSpec extends AnyFunSuite {
     }
   }
 
+  test("every table's sections together are every section: the default decode is the full decode") {
+    assert(Normalizer.datasetNames.flatMap(Normalizer.sectionsFor).toSet ===
+      graft.decode.BlockDecoder.AllSections)
+  }
+
   test("unknown table names fail loudly") {
     val e = intercept[IllegalArgumentException] {
-      Normalizer.decodeBlocksPruned(records, Set("blocks", "nope"))
+      Normalizer.decodeBlocks(spark.emptyDataFrame, Set("blocks", "nope"))
     }
     assert(e.getMessage.contains("nope"))
   }

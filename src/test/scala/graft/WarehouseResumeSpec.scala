@@ -43,35 +43,19 @@ class WarehouseResumeSpec extends AnyFunSuite {
     def loadEra(era: Long) = spark.read.format("era").load(files(era))
 
     // ── reference: one uninterrupted warehouse run ─────────────────────
-    // r13: per-table completion counts ride the write jobs as observed
-    // metrics — assert ZERO read-back count jobs are scheduled (the old
-    // footer-only counts were 16 jobs/era = 160k jobs on a 10k-era
-    // backfill; the fallback path in observedRows is the only remaining
-    // "count at IncrementalExporter" callsite and must never fire)
-    val jobSites = new scala.collection.mutable.ArrayBuffer[String]
-    val jobListener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        val cs = Option(js.properties)
-          .map(_.getProperty("callSite.short", "")).getOrElse("")
-        jobSites.synchronized { jobSites += cs }
-      }
-    }
-    spark.sparkContext.addSparkListener(jobListener)
+    // per-table completion counts ride the write jobs as observed
+    // metrics: no read-back `count` may run (Sinks.writeCounted's
+    // timeout fallback is the only count on this path and must never fire)
     val whA = Files.createTempDirectory("graft-whres-a").toString
     val stateA = new EraStateManager(spark,
       Files.createTempDirectory("graft-whres-state-a").toString)
-    val procA =
-      try IncrementalExporter.runWarehouse(
-        spark, stateA, "gnosis", eras, whA)(loadEra)
-      finally {
-        org.apache.spark.graftutil.ListenerDrain.drain(spark.sparkContext)
-        spark.sparkContext.removeSparkListener(jobListener)
-      }
+    var procA = Seq.empty[Long]
+    val actions = JobLog.actions(spark) {
+      procA = IncrementalExporter.runWarehouse(spark, stateA, "gnosis", eras, whA)(loadEra)
+    }
     assert(procA === eras)
-    val readBackJobs = jobSites.filter(_.contains("count at IncrementalExporter"))
-    assert(readBackJobs.isEmpty,
-      s"completion bookkeeping scheduled read-back count jobs: $readBackJobs")
+    assert(actions.contains("command") && !actions.contains("count"),
+      s"completion bookkeeping ran a read-back count: $actions")
     // and the write-side counts are the TRUE per-table totals: the state
     // log's total_records equals an independent read-back sum over every
     // table except wide_blocks (excluded from the record by contract)
