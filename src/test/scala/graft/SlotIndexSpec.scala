@@ -5,9 +5,9 @@ import java.io.{BufferedOutputStream, File, FileOutputStream}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.{EraFileReader, EraFileWriter, EraScanStats}
-import graft.ssz.{SnappyFramed, Ssz}
-import graft.testkit.{EraFixtures, SszEncoder}
+import graft.sources.{EraFileWriter, EraScanStats}
+import graft.ssz.SnappyFramed
+import graft.testkit.EraFixtures
 
 /** SlotIndex-backed point lookup (VERDICT r12 #3): a pushed `slot = N`
   * equality seeks through the era file's trailing block SlotIndex instead
@@ -25,25 +25,15 @@ class SlotIndexSpec extends AnyFunSuite {
   private val startSlot = era * 8192
   private val nBlocks = 4096 // every EVEN slot offset ⇒ odd offsets are holes
 
-  /** One deep era file: the altair fixture SSZ re-slotted per block (the
-    * slot is the first 8 bytes of `message`, at the offset byte 0 points
-    * to — patching it is exactly what the scan's decompress-peek reads
-    * back). Cached under target/: ~4k compressions is a one-time cost. */
+  /** One deep era file of from-scratch altair blocks ([[SyntheticEra]]),
+    * one per even slot offset. Cached under target/: ~4k encodes and
+    * compressions is a one-time cost. */
   private lazy val deepDir: String = {
-    val dir = new File("target/slotindex-deep")
+    val dir = new File("target/slotindex-deep-synthetic")
     dir.mkdirs()
     val f = new File(dir, f"gnosis-$era%05d-deadbeef.era")
     if (!f.exists()) {
-      val ssz = SszEncoder.encodeSignedBlock(
-        EraFixtures.fixtureJson("gnosis_98300"), "altair")
-      val msgOff = Ssz.readUint32(ssz, 0).toInt
-      val blocks = (0 until nBlocks).map { i =>
-        val slot = startSlot + 2L * i
-        val b = ssz.clone()
-        var j = 0
-        while (j < 8) { b(msgOff + j) = ((slot >>> (8 * j)) & 0xff).toByte; j += 1 }
-        slot -> SnappyFramed.compress(b)
-      }
+      val blocks = (0 until nBlocks).map(i => blockAt(startSlot + 2L * i))
       val out = new BufferedOutputStream(new FileOutputStream(f), 1 << 20)
       try EraFileWriter.writeIndexed(out, blocks,
         state = Some((startSlot + 8192L, Array[Byte](9, 9))),
@@ -52,6 +42,9 @@ class SlotIndexSpec extends AnyFunSuite {
     }
     new File(dir, f.getName).getAbsolutePath
   }
+
+  private def blockAt(slot: Long): (Long, Array[Byte]) =
+    slot -> SnappyFramed.compress(SyntheticEra.blockSsz(slot, "altair"))
 
   private def scan() = spark.read.format("era").load(deepDir)
 
@@ -136,18 +129,10 @@ class SlotIndexSpec extends AnyFunSuite {
     // a PARTIAL index (covers only half the era) cannot prove an
     // out-of-range slot absent — that shape must fall back to the walk
     val dir = java.nio.file.Files.createTempDirectory("slotindex-partial").toString
-    val ssz = SszEncoder.encodeSignedBlock(
-      EraFixtures.fixtureJson("gnosis_98300"), "altair")
     val f = new File(dir, f"gnosis-$era%05d-ab12cd34.era")
     val out = new BufferedOutputStream(new FileOutputStream(f))
     try EraFileWriter.writeIndexed(out,
-      blocks = Seq((startSlot + 10L) -> SnappyFramed.compress {
-        val b = ssz.clone()
-        val mo = Ssz.readUint32(b, 0).toInt
-        var j = 0
-        while (j < 8) { b(mo + j) = (((startSlot + 10L) >>> (8 * j)) & 0xff).toByte; j += 1 }
-        b
-      }),
+      blocks = Seq(blockAt(startSlot + 10L)),
       state = None, startSlot = startSlot, slotCount = 4096)
     finally out.close()
     EraScanStats.reset()
@@ -173,8 +158,7 @@ class SlotIndexSpec extends AnyFunSuite {
 
   test("a file without a SlotIndex falls back to the sequential walk, same answer") {
     val dir = java.nio.file.Files.createTempDirectory("slotindex-noidx").toString
-    val ssz = SszEncoder.encodeSignedBlock(
-      EraFixtures.fixtureJson("gnosis_98300"), "altair")
+    val ssz = SyntheticEra.blockSsz(98300L, "altair")
     val f = new File(dir, "gnosis-00011-cafecafe.era")
     val out = new BufferedOutputStream(new FileOutputStream(f))
     try EraFileWriter.write(out, Iterator(EraFileWriter.blockRecord(ssz)))
@@ -269,15 +253,6 @@ class SlotIndexSpec extends AnyFunSuite {
     // era start and coversWholeEra must be false — the exact shape
     // lookupAll's conservative fallback exists for (VERDICT r13 #4)
     val dir = java.nio.file.Files.createTempDirectory("slotindex-multigroup").toString
-    val ssz = SszEncoder.encodeSignedBlock(
-      EraFixtures.fixtureJson("gnosis_98300"), "altair")
-    val msgOff = Ssz.readUint32(ssz, 0).toInt
-    def blockAt(slot: Long): (Long, Array[Byte]) = {
-      val b = ssz.clone()
-      var j = 0
-      while (j < 8) { b(msgOff + j) = ((slot >>> (8 * j)) & 0xff).toByte; j += 1 }
-      slot -> SnappyFramed.compress(b)
-    }
     val half = 4096
     val g1Slots = (0 until 64).map(i => startSlot + 2L * i)
     val g2Slots = (0 until 64).map(i => startSlot + half + 2L * i)

@@ -1,8 +1,12 @@
 package graft
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FSDataInputStream, FileSystem, Path}
 import org.scalacheck.Gen
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.model.EraRecord
+import graft.sources.{EraFileInfo, EraFileReader, EraFileWriter, EraScanStats, EraSlotIndex}
 import graft.ssz.{SnappyFramed, Ssz}
 
 /** Property tests for the SSZ decode core (SURVEY.md §5 plan item 4):
@@ -137,7 +141,6 @@ class SszPropertySpec extends AnyFunSuite {
   }
 
   test("era reader tolerates truncated and garbage files (skips, never throws)") {
-    import graft.sources.{EraFileInfo, EraFileReader}
     val info = EraFileInfo.fromPath("gnosis-00001-deadbeef.era")
     def read(bytes: Array[Byte]) =
       EraFileReader.readRecords(new java.io.ByteArrayInputStream(bytes), info).toVector
@@ -148,5 +151,98 @@ class SszPropertySpec extends AnyFunSuite {
     val truncated = Array[Byte]('e', '2', 's', 't', 0, 0, 0, 0,
       0x01, 0x00, 100, 0, 0, 0, 0, 0, /* payload shorter than length: */ 1, 2, 3)
     assert(read(truncated).isEmpty)
+    // a record length above Int.MaxValue ends the walk after the records
+    // before it; narrowed to an Int it would wrap negative, skip no
+    // payload, and re-read the bytes behind the header (here a whole
+    // valid record) as further records
+    val withBlock = new java.io.ByteArrayOutputStream()
+    EraFileWriter.write(withBlock,
+      Iterator(EraFileWriter.blockRecord(SyntheticEra.blockSsz(8200L, "altair"))))
+    val valid = withBlock.toByteArray
+    val overLength = Array[Byte](0x01, 0x00, -1, -1, -1, -1, 0, 0)
+    val got = read(valid ++ overLength ++ valid.drop(8))
+    assert(got.map(r => (r.slot, r.record_type)) === Vector((8200L, "block")))
+    assert(got.head.data.sameElements(valid.drop(16)))
   }
+
+  test("SlotIndex seek answers exactly the walk's records for the asked slots, or walks") {
+    // 1- or 2-group files with random holes, a filename era that does or
+    // does not match the index, and sometimes a lying tail index (two
+    // block offsets swapped). The reader either returns the walk's block
+    // records for exactly the asked slots, or falls back to the walk and
+    // returns every record — never a partial or different answer.
+    val fs = FileSystem.getLocal(new Configuration())
+    val dir = java.nio.file.Files.createTempDirectory("seek-vs-walk").toFile
+    val era = 3L
+    val first = era * 8192
+    val perGroup = 12
+    val compressed = scala.collection.mutable.Map.empty[Long, Array[Byte]]
+    def blockAt(slot: Long): (Long, Array[Byte]) = slot -> compressed.getOrElseUpdate(
+      slot, SnappyFramed.compress(SyntheticEra.blockSsz(slot, "altair")))
+    def starts(groups: Int): Seq[Long] =
+      if (groups == 1) Seq(first) else Seq(first, first + 4096)
+    val gen = for {
+      groups <- Gen.oneOf(1, 2)
+      present <- Gen.listOfN(groups, Gen.listOfN(perGroup, Gen.prob(0.6)))
+      nameEra <- Gen.oneOf(era, era + 1)
+      lie <- Gen.prob(0.3)
+      candidates = starts(groups).flatMap(s => s to s + perGroup) ++
+        Seq(first - 1, first + 8192)
+      n <- Gen.chooseNum(1, 5)
+      asked <- Gen.pick(n, candidates)
+    } yield (groups, present, nameEra, lie, asked.toSeq)
+
+    def row(r: EraRecord) =
+      (r.slot, r.record_type, r.data.toSeq, r.network, r.era_number, r.source_file)
+    var seeks = 0
+    var walks = 0
+    forAll(gen, 60) { case (groups, present, nameEra, lie, asked) =>
+      val slotCount = 8192 / groups
+      val layout = starts(groups).zip(present).map { case (s, bits) =>
+        EraFileWriter.EraGroup(
+          bits.zipWithIndex.collect { case (true, i) => blockAt(s + i) },
+          Some((s + slotCount, Array[Byte](5, 5))), s, slotCount)
+      }
+      val bos = new java.io.ByteArrayOutputStream()
+      EraFileWriter.writeGroups(bos, layout)
+      val bytes = bos.toByteArray
+      val tailPresent = present.last.zipWithIndex.collect { case (true, i) => i }
+      if (lie && tailPresent.size >= 2) {
+        // the tail block index sits before the 32-byte state index record
+        val idxPos = bytes.length - 32 - (24 + 8 * slotCount)
+        val Seq(a, b) = tailPresent.take(2).map(i => idxPos + 16 + 8 * i)
+        val entryA = bytes.slice(a, a + 8)
+        System.arraycopy(bytes, b, bytes, a, 8)
+        System.arraycopy(entryA, 0, bytes, b, 8)
+      }
+      val f = new java.io.File(dir, f"gnosis-$nameEra%05d-5eec0000.era")
+      java.nio.file.Files.write(f.toPath, bytes)
+      val info = EraFileInfo.fromPath(f.getPath)
+      val path = new Path(f.getPath)
+
+      val in = fs.open(path)
+      val walked = try EraFileReader.readRecords(in, info).map(row).toVector
+        finally in.close()
+      val fullScans0 = EraScanStats.fullScans.sum()
+      val in2 = fs.open(path)
+      val got = try scanRecords(in2, bytes.length.toLong, info, asked).map(row).toVector
+        finally in2.close()
+      if (EraScanStats.fullScans.sum() > fullScans0) {
+        walks += 1
+        assert(got === walked)
+      } else {
+        seeks += 1
+        assert(got === walked
+          .filter(r => r._2 == "block" && asked.contains(r._1)).sortBy(_._1))
+      }
+    }
+    assert(seeks > 0 && walks > 0, s"seeks=$seeks walks=$walks")
+  }
+
+  private def scanRecords(in: FSDataInputStream, fileLen: Long, info: EraFileInfo,
+      slots: Seq[Long]): Iterator[EraRecord] =
+    EraSlotIndex.lookupAll(in, fileLen, info, slots).getOrElse {
+      EraScanStats.fullScans.increment()
+      EraFileReader.readRecords(in, info)
+    }
 }

@@ -19,7 +19,8 @@ object SyntheticEra {
   private def hex(n: Int, fill: Long): String =
     "0x" + (0 until n).map(i => f"${((fill * 31 + i * 7) & 0xff).toInt}%02x").mkString
 
-  private def block(slot: Long, fork: String): Array[Byte] = {
+  /** Uncompressed SSZ of the synthetic `fork` signed block at `slot`. */
+  def blockSsz(slot: Long, fork: String): Array[Byte] = {
     val data = mapper.createObjectNode()
     val msg = data.putObject("message")
     msg.put("slot", slot.toString); msg.put("proposer_index", (slot % 97).toString)
@@ -47,7 +48,7 @@ object SyntheticEra {
       sync.put("sync_committee_bits", hex(64, slot + 9))
       sync.put("sync_committee_signature", hex(96, slot + 10))
     }
-    SnappyFramed.compress(SszEncoder.encodeSignedBlock(data, fork))
+    SszEncoder.encodeSignedBlock(data, fork)
   }
 
   /** Write era `era` with `blocks` blocks at its first slots (slot 0 is
@@ -60,7 +61,7 @@ object SyntheticEra {
     new File(dir).mkdirs()
     val f = new File(dir, f"gnosis-$era%05d-5e0e$era%04x.era")
     val out = new BufferedOutputStream(new FileOutputStream(f))
-    try EraFileWriter.writeIndexed(out, slots.map(s => s -> block(s, fork)),
+    try EraFileWriter.writeIndexed(out, slots.map(s => s -> SnappyFramed.compress(blockSsz(s, fork))),
       Some((first + 8192L, Array[Byte](1, 2, 3, 4))), first, 8192)
     finally out.close()
     f
