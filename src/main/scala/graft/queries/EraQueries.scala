@@ -118,7 +118,7 @@ object EraQueries {
       }),
       // P1 batch form: `slot IN (…)` — pushed as sources.In, file-pruned,
       // and answered through ONE SlotIndex tail parse + one probe per slot
-      // per surviving file (EraSlotIndex.lookupAll; r13). The middle value
+      // per surviving file (EraFileReader.read; r13). The middle value
       // is a HOLE (no block at that slot in any fixture era), so the
       // indexed-miss path is oracle-checked too.
       "era_point_lookup_multi" -> ((s, _) => {

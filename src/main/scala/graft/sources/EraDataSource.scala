@@ -23,9 +23,10 @@ import org.apache.spark.unsafe.types.UTF8String
  * Produces the raw-record relation of SURVEY.md §1.1:
  * `slot LONG, record_type STRING, data BINARY, network STRING,
  *  era_number LONG, source_file STRING` — one [[InputPartition]] per era
- * file, so a directory of N eras scans with N-way parallelism (the
- * reference's serial per-era loop becomes cluster partition parallelism,
- * SURVEY.md §3.2).
+ * file, so a multi-file `load` of N eras scans with N-way parallelism
+ * (SURVEY.md §3.2). The incremental per-era loop
+ * ([[graft.export.IncrementalExporter]]) still loads one era, and so scans
+ * one partition, at a time.
  *
  * Scale design:
  *  - file-level pruning: predicates on `era_number` / `slot` / `network`
@@ -307,21 +308,11 @@ class EraPartitionReader(pathStr: String, conf: Configuration,
     slotSet: Option[Seq[Long]] = None)
     extends PartitionReader[InternalRow] {
 
-  private val info = EraFileInfo.fromPath(pathStr)
-  private val fs = new Path(pathStr).getFileSystem(conf)
-  private val stream = fs.open(new Path(pathStr))
-  // pushed slot equality / IN set → SlotIndex seeks (O(1 record) bytes
-  // per requested slot); any malformed/absent index falls back to the
-  // sequential walk, whose residual filters keep the answer identical
-  private val records = slotSet
-    .flatMap(s =>
-      EraSlotIndex.lookupAll(stream,
-        fs.getFileStatus(new Path(pathStr)).getLen, info, s))
-    .getOrElse {
-      EraScanStats.fullScans.increment()
-      EraFileReader.readRecords(
-        new CountingInputStream(stream, EraScanStats.bytesRead), info)
-    }
+  private val path = new Path(pathStr)
+  private val fs = path.getFileSystem(conf)
+  private val stream = fs.open(path)
+  private val records = EraFileReader.read(stream, fs.getFileStatus(path).getLen,
+    EraFileInfo.fromPath(pathStr), slotSet)
   private var current: graft.model.EraRecord = _
 
   override def next(): Boolean = {

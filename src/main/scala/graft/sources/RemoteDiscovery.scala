@@ -17,8 +17,10 @@ import scala.util.matching.Regex
  *
  * All of this is driver-side catalog code (the reference:
  * `era_parser/ingestion/remote_downloader.py`): it produces the file list
- * that `spark.read.format("era").load(...)` then parallelizes over — the
- * reference's serial per-era loop becomes cluster partition parallelism.
+ * that a multi-file `spark.read.format("era").load(...)` then scans one
+ * partition per era. The `--remote` loop
+ * ([[graft.export.IncrementalExporter]]) still downloads and scans one
+ * era, one partition, at a time, like the reference's serial per-era loop.
  * Downloads can also run executor-side (one era per partition) by mapping
  * [[download]] over a parallelized era list.
  */

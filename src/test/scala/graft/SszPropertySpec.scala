@@ -1,12 +1,12 @@
 package graft
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FSDataInputStream, FileSystem, Path}
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.scalacheck.Gen
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.model.EraRecord
-import graft.sources.{EraFileInfo, EraFileReader, EraFileWriter, EraScanStats, EraSlotIndex}
+import graft.sources.{EraFileInfo, EraFileReader, EraFileWriter, EraScanStats}
 import graft.ssz.{SnappyFramed, Ssz}
 
 /** Property tests for the SSZ decode core (SURVEY.md §5 plan item 4):
@@ -225,7 +225,7 @@ class SszPropertySpec extends AnyFunSuite {
         finally in.close()
       val fullScans0 = EraScanStats.fullScans.sum()
       val in2 = fs.open(path)
-      val got = try scanRecords(in2, bytes.length.toLong, info, asked).map(row).toVector
+      val got = try EraFileReader.read(in2, bytes.length.toLong, info, Some(asked)).map(row).toVector
         finally in2.close()
       if (EraScanStats.fullScans.sum() > fullScans0) {
         walks += 1
@@ -238,11 +238,4 @@ class SszPropertySpec extends AnyFunSuite {
     }
     assert(seeks > 0 && walks > 0, s"seeks=$seeks walks=$walks")
   }
-
-  private def scanRecords(in: FSDataInputStream, fileLen: Long, info: EraFileInfo,
-      slots: Seq[Long]): Iterator[EraRecord] =
-    EraSlotIndex.lookupAll(in, fileLen, info, slots).getOrElse {
-      EraScanStats.fullScans.increment()
-      EraFileReader.readRecords(in, info)
-    }
 }
