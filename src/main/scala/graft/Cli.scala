@@ -17,7 +17,7 @@ import graft.sources.RemoteDiscovery
  * graft <era_file_or_glob> <dataset> <out>          # one of the 15 datasets
  * graft --remote <base_url> <network> <range> <cmd> <out>
  *       [--separate] [--force] [--download-only]
- *       [--state-dir D] [--cache-dir D]             # incremental remote ETL
+ *       [--state-dir D] [--cache-dir D] [--data-root D]  # incremental remote ETL
  *       [--warehouse D]   # land eras in the at-rest SQL warehouse instead
  *                         # (the reference's ClickHouse loop: resume →
  *                         # per-era atomic commit → paste SQL at the store)
@@ -293,10 +293,6 @@ object Cli {
     }
     val verb = rest.lift(2).getOrElse("all-blocks")
     val out = rest.lift(3).getOrElse("output/remote.parquet")
-    // force-clean must target where the outputs actually land: default the
-    // clean root to the resolved out path's parent, not a fixed "output"
-    val dataRoot = opts.getOrElse("--data-root",
-      Option(new java.io.File(out).getParent).getOrElse("."))
     val spark = session()
     val state = new EraStateManager(spark, stateDir)
     val eras = discovered.map(_._1.toLong)
@@ -318,7 +314,8 @@ object Cli {
           force = flags.contains("--force"))(loadEra)
       case None => graft.export.IncrementalExporter.run(
         spark, state, network, eras, out, verb,
-        force = flags.contains("--force"), dataRoot = Some(dataRoot))(loadEra)
+        force = flags.contains("--force"),
+        dataRoot = opts.get("--data-root").filter(_.nonEmpty))(loadEra)
     }
     // every not-yet-completed era of the range was attempted this run, so
     // the ones whose latest state is `failed` are exactly this run's failures
@@ -387,6 +384,7 @@ object Cli {
       |  graft --migrate <jdbc-url> <status|run|list> [version]
       |  graft --remote <base_url> <network> <era_range> [cmd] [out]
       |        [--separate] [--force] [--download-only] [--state-dir D] [--cache-dir D]
+      |        [--data-root D]
       |  graft --era-status <network> [--state-dir D]
       |  graft --clean-failed-eras <network> [--state-dir D] [--data-root D]
       |  graft --compact-warehouse <warehouse_dir> <network> [--target-mb N]

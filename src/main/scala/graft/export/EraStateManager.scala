@@ -1,8 +1,8 @@
 package graft.export
 
-import java.nio.file.{Files, Paths}
 import java.util.concurrent.atomic.AtomicLong
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -30,7 +30,9 @@ import graft.config.Networks
  *
  * At scale the log stays tiny (rows ∝ eras processed), so every read is a
  * broadcast-size scan; the anti-join broadcasts the completed set against
- * the available list.
+ * the available list. The state dir and the data roots it cleans may be
+ * on any Hadoop filesystem (hdfs://, s3a://, file:, local): every touch
+ * goes through the `FileSystem` bound to the path's URI.
  */
 object EraStateManager {
 
@@ -58,6 +60,10 @@ object EraStateManager {
 class EraStateManager(spark: SparkSession, stateDir: String) {
 
   private val logPath = s"$stateDir/era_completion"
+  private def logExists: Boolean = {
+    val p = new Path(logPath)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
+  }
   // monotonic within the process AND tracking wall-clock across processes:
   // next = max(prev + 1, now). Two managers on the same state dir then
   // interleave versions in real-time order (same-millisecond writes from
@@ -113,7 +119,7 @@ class EraStateManager(spark: SparkSession, stateDir: String) {
     * old+new log needs the coalesce, not just the add-column: mergeSchema
     * surfaces the column but reads legacy files' rows as NULL. */
   def log: DataFrame =
-    if (Files.exists(Paths.get(logPath))) {
+    if (logExists) {
       val df = spark.read.option("mergeSchema", "true").parquet(logPath)
       if (df.columns.contains("writer_id"))
         df.withColumn("writer_id", coalesce(col("writer_id"), lit("")))
@@ -185,7 +191,7 @@ class EraStateManager(spark: SparkSession, stateDir: String) {
     * analogue (era_state_manager.py:329-346): rewrite the append-only log
     * keeping only the latest-version row per (network, era_number). */
   def optimize(): Unit = {
-    if (!Files.exists(Paths.get(logPath))) return
+    if (!logExists) return
     val schema = log.schema
     val latest = eraStatus.collect().toSeq
     spark.createDataFrame(spark.sparkContext.parallelize(latest, 1), schema)
@@ -197,27 +203,17 @@ class EraStateManager(spark: SparkSession, stateDir: String) {
     * slot-range DELETE — data is era-partitioned, so clean = partition
     * remove) and erase the era from the state log via filtered rewrite. */
   def cleanEraCompletely(dataRoot: String, network: String, era: Long): Unit = {
+    val root = new Path(dataRoot)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // partitioned layout: <root>/<dataset>/era_number=<era>
-    allDatasets.foreach { ds =>
-      val p = Paths.get(s"$dataRoot/$ds/era_number=$era")
-      if (Files.exists(p)) {
-        Files.walk(p).sorted(java.util.Comparator.reverseOrder())
-          .forEach(f => Files.delete(f))
-      }
-    }
+    allDatasets.foreach(ds => fs.delete(new Path(root, s"$ds/era_number=$era"), true))
     // era-suffixed CLI layout: <root>/..._era_<00000>_<dataset>.<ext>
     // (Sinks.eraOutputFilename) — a failed era's partial outputs must go too
-    val root = Paths.get(dataRoot)
     val eraTag = f"_era_$era%05d"
-    if (Files.exists(root)) {
-      Files.list(root).forEach { p =>
-        if (p.getFileName.toString.contains(eraTag)) {
-          Files.walk(p).sorted(java.util.Comparator.reverseOrder())
-            .forEach(f => Files.delete(f))
-        }
-      }
-    }
-    if (Files.exists(Paths.get(logPath))) {
+    if (fs.exists(root))
+      fs.listStatus(root).map(_.getPath).filter(_.getName.contains(eraTag))
+        .foreach(fs.delete(_, true))
+    if (logExists) {
       // the log is tiny (rows ∝ state transitions) — materialize on the
       // driver, then overwrite; avoids writing over a lazily-read source
       val schema = log.schema

@@ -44,13 +44,18 @@ object IncrementalExporter {
     * era ends), the 15 tables are written concurrently from it, and each
     * table's completion count comes from its own write job. A killed
     * run's stage is overwritten by the resume's, so the output directory
-    * a resume leaves equals an uninterrupted run's. */
+    * a resume leaves equals an uninterrupted run's.
+    *
+    * `out` and `dataRoot` may be on any Hadoop filesystem. `dataRoot` is
+    * where `force` cleans an era's outputs before redoing it; it defaults
+    * to `out`'s parent directory, where the era-suffixed outputs land. */
   def run(spark: SparkSession, state: EraStateManager, network: String,
       eras: Seq[Long], out: String, verb: String = "all-blocks",
       force: Boolean = false, dataRoot: Option[String] = None)(
       loadEra: Long => DataFrame): Seq[Long] = {
-    val cleanRoot =
-      dataRoot.getOrElse(Option(new java.io.File(out).getParent).getOrElse("."))
+    // a bare file name's parent is the empty path: the working directory
+    val cleanRoot = dataRoot.getOrElse(Option(new org.apache.hadoop.fs.Path(out).getParent)
+      .map(_.toString).filter(_.nonEmpty).getOrElse("."))
     eachEra(state, network, eras, force)(state.cleanEraCompletely(cleanRoot, network, _)) { era =>
       val eraOut = Sinks.eraOutputFilename(out, era.toInt)
       val counts =
@@ -131,10 +136,9 @@ object IncrementalExporter {
       loadEra: Long => DataFrame): Seq[Long] = {
     // every filesystem touch goes through the Hadoop FileSystem bound to
     // the warehouse URI — the loop's own contract is "any store Spark can
-    // write" (hdfs://, s3a://, local), and java.nio would treat a scheme'd
-    // path as a relative local dir: the pre-drop would silently never
-    // fire (a dead run's torn partition in a now-empty table would
-    // survive resume) and every footer count would read 0
+    // write" (hdfs://, s3a://, local), and a pre-drop that missed the store
+    // would let a dead run's torn partition in a now-empty table survive
+    // resume
     val netDir = s"$warehouseDir/$network"
     val fs = new org.apache.hadoop.fs.Path(netDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)

@@ -1,10 +1,7 @@
 package graft.export
 
-import java.nio.file.{Files, Paths, StandardOpenOption}
-
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.sql.{DataFrame, Observation}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions.{count, lit}
 
 /**
@@ -28,6 +25,9 @@ import org.apache.spark.sql.functions.{count, lit}
  * distributed-native shape. At 100 TB one file per sink is a non-goal;
  * downstream consumers read the directory; the opt-in `--parity`
  * envelope ([[Sinks.writeWithEnvelope]]) is the one single-file shape.
+ * Outputs may be on any Hadoop filesystem: the sidecar, SUMMARY and
+ * envelope files go through the `FileSystem` bound to the output's URI,
+ * like Spark's own writes.
  */
 object Sinks {
 
@@ -64,7 +64,10 @@ object Sinks {
       metadata: Map[String, String] = Map.empty): Long = {
     val fmt = formatOf(path)
     val n = writeCounted(df)(writeAs(_, fmt, path))(readBack(df, fmt, path))
-    if (metadata.nonEmpty) writeMetadataSidecar(path, metadata + ("rows" -> n.toString))
+    // the reference's per-file KV metadata (era number, network, slot
+    // range — parquet_exporter.py:40-55) as a sidecar inside the output dir
+    if (metadata.nonEmpty) writeText(df.sparkSession, new Path(path, "_era_metadata.json"),
+      jsonObject(metadata + ("rows" -> n.toString)))
     n
   }
 
@@ -137,21 +140,17 @@ object Sinks {
       eraInfo: Map[String, String] = Map.empty): Long = {
     val fmt = formatOf(path)
     require(fmt == "json" || fmt == "csv", s"envelope parity applies to csv/json, not $fmt")
-    val tmp = s"$path.__parts"
-    val n = writeCounted(df.coalesce(1))(writeAs(_, fmt, tmp))(readBack(df, fmt, tmp))
-    val listing = Files.list(Paths.get(tmp))
-    val part =
-      try listing.iterator().asScala
-        .find(_.getFileName.toString.startsWith("part-"))
-        .getOrElse(throw new IllegalStateException(s"no part file under $tmp"))
-      finally listing.close()
+    val tmp = new Path(s"$path.__parts")
+    val n = writeCounted(df.coalesce(1))(writeAs(_, fmt, tmp.toString))(
+      readBack(df, fmt, tmp.toString))
+    val fs = tmp.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
+    val part = fs.listStatus(tmp).map(_.getPath).find(_.getName.startsWith("part-"))
+      .getOrElse(throw new IllegalStateException(s"no part file under $tmp"))
     val ts = java.time.OffsetDateTime.now(java.time.ZoneOffset.UTC)
       .format(java.time.format.DateTimeFormatter.ISO_OFFSET_DATE_TIME)
     val envelope =
       if (fmt == "json") {
-        val eraJson = eraInfo.toSeq.sortBy(_._1)
-          .map { case (k, v) => s""""${esc(k)}": "${esc(v)}"""" }.mkString("{", ", ", "}")
-        s"""{"era_info": $eraJson, "data_type": "${esc(dataType)}", "record_count": $n, "export_timestamp": "$ts", "type": "metadata"}\n"""
+        s"""{"era_info": ${jsonObject(eraInfo)}, "data_type": "${esc(dataType)}", "record_count": $n, "export_timestamp": "$ts", "type": "metadata"}\n"""
       } else {
         val era = eraInfo.getOrElse("era_number", "?")
         val slots = (eraInfo.get("start_slot"), eraInfo.get("end_slot")) match {
@@ -162,18 +161,13 @@ object Sinks {
           s"# Network: ${eraInfo.getOrElse("network", "?")}\n" +
           s"# Export timestamp: $ts\n# Total records: $n\n"
       }
-    val target = Paths.get(path)
-    if (target.getParent != null) Files.createDirectories(target.getParent)
-    val out = Files.newOutputStream(target,
-      StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
+    val out = fs.create(new Path(path), true)
     try {
       out.write(envelope.getBytes("UTF-8"))
-      Files.copy(part, out)
+      val in = fs.open(part)
+      try in.transferTo(out) finally in.close()
     } finally out.close()
-    // drop the temp part dir
-    val walk = Files.walk(Paths.get(tmp))
-    try walk.sorted(java.util.Comparator.reverseOrder()).forEach(f => Files.delete(f))
-    finally walk.close()
+    fs.delete(tmp, true)
     n
   }
 
@@ -183,14 +177,16 @@ object Sinks {
     val f = formatOf(path); f == "json" || f == "csv"
   }
 
-  /** The reference's per-file KV metadata (era number, network, slot range
-    * — parquet_exporter.py:40-55) as a JSON sidecar inside the output dir. */
-  private def writeMetadataSidecar(path: String, meta: Map[String, String]): Unit = {
-    val json = meta.toSeq.sortBy(_._1)
-      .map { case (k, v) => s""""${esc(k)}": "${esc(v)}"""" }
+  /** `m` as a flat JSON object of strings, keys sorted. */
+  private def jsonObject(m: Map[String, String]): String =
+    m.toSeq.sortBy(_._1).map { case (k, v) => s""""${esc(k)}": "${esc(v)}"""" }
       .mkString("{", ", ", "}")
-    Files.write(Paths.get(path, "_era_metadata.json"), json.getBytes("UTF-8"),
-      StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
+
+  /** Create or overwrite the file `path` with `text`, UTF-8, through the
+    * `FileSystem` bound to its URI (missing parents are created). */
+  private def writeText(spark: SparkSession, path: Path, text: String): Unit = {
+    val out = path.getFileSystem(spark.sparkContext.hadoopConfiguration).create(path, true)
+    try out.write(text.getBytes("UTF-8")) finally out.close()
   }
 
   private def esc(s: String): String =
@@ -231,10 +227,7 @@ object Sinks {
     val (stem, _) = splitExt(baseOutput)
     val summary = timed.map { case (n, (c, _)) => s"$n: $c records" }
       .mkString("", "\n", "\n")
-    val summaryPath = Paths.get(s"${stem}_SUMMARY.txt")
-    if (summaryPath.getParent != null) Files.createDirectories(summaryPath.getParent)
-    Files.write(summaryPath, summary.getBytes("UTF-8"),
-      StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
+    writeText(spark, new Path(s"${stem}_SUMMARY.txt"), summary)
     timed.toMap
   }
 

@@ -12,7 +12,7 @@ import graft.testkit.EraFixtures
 
 /** CLI verb surface (cli.py:8-54 shape). Each test drives Cli.main
   * end-to-end; Cli owns (and stops) its SparkSession. */
-class CliSpec extends AnyFunSuite {
+class CliSpec extends AnyFunSuite with OnEveryRoot {
 
   private lazy val eraDir = EraFixtures.ensureGenerated()
 
@@ -34,18 +34,19 @@ class CliSpec extends AnyFunSuite {
     assert(out.contains("\"sync_aggregate\"")) // altair body present
   }
 
-  /** `graft <eras> all-blocks <dir>/out.parquet --separate` on the shared
+  /** `graft <eras> all-blocks <root>/out.parquet --separate` on the shared
     * test session (pre-existing, so the CLI leaves it running), checked
     * against the staged fan-out's contract: each printed count equals the
     * per-table reference, the stage beside the output is gone, and every
     * job the call launched wrote output — none read it back to count it.
+    * `root` names the local directory `dir`, as a plain path or a URI.
     * Returns what the CLI printed. */
-  private def separateExport(eras: String, dir: String): String = {
+  private def separateExport(eras: String, root: String, dir: String): String = {
     val spark = TestSpark.spark
     var out = ""
     val jobs = JobLog.during(spark) {
       out = captureOut {
-        Cli.main(Array(eras, "all-blocks", s"$dir/out.parquet", "--separate"))
+        Cli.main(Array(eras, "all-blocks", s"$root/out.parquet", "--separate"))
       }
     }
     assert(jobs.nonEmpty && JobLog.readOnly(jobs).isEmpty, s"read-back jobs ran: $jobs")
@@ -61,25 +62,28 @@ class CliSpec extends AnyFunSuite {
 
   test("all-blocks --separate fans out the datasets with reference naming") {
     val dir = Files.createTempDirectory("cli-out").toString
-    val out = separateExport(eraDir, dir)
+    val out = separateExport(eraDir, dir, dir)
     assert(out.contains("blocks: 8 records")) // 8 fixture eras, 1 block each
     assert(Files.exists(Paths.get(s"$dir/out_blocks.parquet")))
     assert(Files.exists(Paths.get(s"$dir/out_attestations.parquet")))
     assert(Files.exists(Paths.get(s"$dir/out_SUMMARY.txt")))
   }
 
-  test("all-blocks --separate over from-scratch era files: same contract") {
+  testOnEveryRoot("all-blocks --separate over from-scratch era files: same contract") {
+      (root, dir) =>
     val eras = Files.createTempDirectory("cli-syn-eras").toString
     SyntheticEra.write(eras, 0, 6)
     SyntheticEra.write(eras, 1, 5)
-    val dir = Files.createTempDirectory("cli-syn-out").toString
-    val out = separateExport(eras, dir)
+    val out = separateExport(eras, root, dir)
     assert(out.linesIterator.contains("blocks: 11 records"), out)
     assert(out.linesIterator.contains("attestations: 11 records"), out)
+    // the SUMMARY sits beside the tables
+    assert(Files.exists(Paths.get(s"$dir/out_blocks.parquet")))
     assert(Files.exists(Paths.get(s"$dir/out_SUMMARY.txt")))
   }
 
-  test("--remote names the era that failed and returns a non-zero status") {
+  testOnEveryRoot("--remote names the era that failed and returns a non-zero status") {
+      (root, dir) =>
     // era 1 downloads intact; era 2's transfer is cut off half way — a
     // corrupt era the loop must record as failed, not report as done
     val src = Files.createTempDirectory("cli-remote-src").toString
@@ -106,19 +110,43 @@ class CliSpec extends AnyFunSuite {
     })
     server.start()
     try {
-      val work = Files.createTempDirectory("cli-remote").toString
-      var status = -1
-      val out = captureOut {
-        status = Cli.run(Array("--remote", s"http://127.0.0.1:${server.getAddress.getPort}",
-          "gnosis", "1-2", "all-blocks", s"$work/out/remote.parquet",
-          "--state-dir", s"$work/state", "--cache-dir", s"$work/cache"))
+      val cache = Files.createTempDirectory("cli-remote-cache").toString
+      def remote(): (Int, String) = {
+        var status = -1
+        val out = captureOut {
+          status = Cli.run(Array("--remote", s"http://127.0.0.1:${server.getAddress.getPort}",
+            "gnosis", "1-2", "all-blocks", s"$root/out/remote.parquet",
+            "--state-dir", s"$root/state", "--cache-dir", cache))
+        }
+        (status, out)
       }
+      val (status, out) = remote()
       assert(out.linesIterator.contains("processed 1 of 2 eras; 1 failed: 2"), out)
       assert(status === 1)
-      // the intact era landed through the staged fan-out, its stage removed
-      val landed = new java.io.File(s"$work/out").list().toSeq
+      // the intact era landed through the staged fan-out, its stage
+      // removed, its SUMMARY beside its tables
+      def landed = new java.io.File(s"$dir/out").list().toSeq
       assert(landed.contains("remote_era_00001_blocks.parquet"), landed)
+      assert(landed.contains("remote_era_00001_SUMMARY.txt"), landed)
       assert(!landed.exists(_.contains("__stage")), landed)
+
+      // resume: the completed era is not redone, the failed one is retried
+      val summary = Paths.get(s"$dir/out/remote_era_00001_SUMMARY.txt")
+      val written = Files.getLastModifiedTime(summary)
+      val (again, out2) = remote()
+      assert(out2.linesIterator.contains("processed 0 of 2 eras; 1 failed: 2"), out2)
+      assert(again === 1)
+      assert(Files.getLastModifiedTime(summary) === written, "era 1 was exported again")
+
+      // a killed run's partial output of the failed era, then the clean-up
+      Files.createDirectories(Paths.get(s"$dir/out/remote_era_00002_blocks.parquet"))
+      val cleaned = captureOut {
+        Cli.run(Array("--clean-failed-eras", "gnosis", "--state-dir", s"$root/state",
+          "--data-root", s"$root/out"))
+      }
+      assert(cleaned.linesIterator.contains("cleaned 1 failed eras: 2"), cleaned)
+      assert(!landed.exists(_.startsWith("remote_era_00002")), landed)
+      assert(landed.contains("remote_era_00001_blocks.parquet"), landed)
     } finally server.stop(0)
   }
 

@@ -6,10 +6,10 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.export.{EraStateManager, Sinks}
+import graft.export.{EraStateManager, IncrementalExporter, Sinks}
 
 /** Sink layer (S11–S16) + incremental state layer (P6/J4/W3/A5/A6). */
-class ExportStateSpec extends AnyFunSuite {
+class ExportStateSpec extends AnyFunSuite with OnEveryRoot {
 
   private lazy val spark = TestSpark.spark
 
@@ -94,9 +94,9 @@ class ExportStateSpec extends AnyFunSuite {
     }
   }
 
-  test("separate-files fan-out writes every dataset + SUMMARY.txt, all formats readable") {
+  testOnEveryRoot("separate-files fan-out writes every dataset + SUMMARY.txt, all formats readable") {
+      (dir, local) =>
     import spark.implicits._
-    val dir = tmpDir("sinks")
     val ds1 = Seq((1L, "a"), (2L, "b")).toDF("slot", "v")
     val ds2 = Seq((3L, 1.5)).toDF("slot", "x")
     for (ext <- Seq("parquet", "csv", "json")) {
@@ -111,7 +111,7 @@ class ExportStateSpec extends AnyFunSuite {
       // the counts ride the write jobs: every job wrote, none read back
       assert(jobs.size === 2 && JobLog.readOnly(jobs).isEmpty,
         s"$ext export ran read-back jobs: $jobs")
-      val summary = new String(Files.readAllBytes(Paths.get(s"$dir/$ext/out_SUMMARY.txt")), "UTF-8")
+      val summary = new String(Files.readAllBytes(Paths.get(s"$local/$ext/out_SUMMARY.txt")), "UTF-8")
       assert(summary.contains("t1: 2 records") && summary.contains("t2: 1 records"))
       // round-trip
       val back = ext match {
@@ -122,21 +122,21 @@ class ExportStateSpec extends AnyFunSuite {
       assert(back.count() === 2)
       // KV metadata sidecar (S14)
       val meta = new String(
-        Files.readAllBytes(Paths.get(s"$dir/$ext/out_t1.$ext/_era_metadata.json")), "UTF-8")
+        Files.readAllBytes(Paths.get(s"$local/$ext/out_t1.$ext/_era_metadata.json")), "UTF-8")
       assert(meta.contains("\"era\": \"42\"") && meta.contains("\"rows\": \"2\""))
     }
   }
 
-  test("--parity envelope: CSV '#' preamble and JSONL metadata first line (S11/S13)") {
+  testOnEveryRoot("--parity envelope: CSV '#' preamble and JSONL metadata first line (S11/S13)") {
+      (dir, local) =>
     import spark.implicits._
-    val dir = tmpDir("envelope")
     val df = Seq((1L, "a"), (2L, "b")).toDF("slot", "v")
     val info = Map("era_number" -> "42", "network" -> "gnosis",
       "start_slot" -> "344064", "end_slot" -> "352255")
 
     val nCsv = Sinks.writeWithEnvelope(df, s"$dir/out.csv", "blocks", info)
     assert(nCsv === 2)
-    val csv = new String(Files.readAllBytes(Paths.get(s"$dir/out.csv")), "UTF-8")
+    val csv = new String(Files.readAllBytes(Paths.get(s"$local/out.csv")), "UTF-8")
     val csvLines = csv.split("\n")
     assert(csvLines(0) === "# Era 42: blocks data")
     assert(csvLines(1) === "# Slots: 344064 - 352255")
@@ -148,13 +148,14 @@ class ExportStateSpec extends AnyFunSuite {
 
     val nJson = Sinks.writeWithEnvelope(df, s"$dir/out.jsonl", "blocks", info)
     assert(nJson === 2)
-    val jsonLines = new String(Files.readAllBytes(Paths.get(s"$dir/out.jsonl")), "UTF-8")
+    val jsonLines = new String(Files.readAllBytes(Paths.get(s"$local/out.jsonl")), "UTF-8")
       .split("\n")
     assert(jsonLines.length === 3)
     assert(jsonLines(0).contains("\"type\": \"metadata\""))
     assert(jsonLines(0).contains("\"record_count\": 2"))
     assert(jsonLines(0).contains("\"era_number\": \"42\""))
     assert(jsonLines(1).contains("\"slot\"")) // data rows follow
+    assert(!Files.exists(Paths.get(s"$local/out.csv.__parts")), "temp part dir left behind")
   }
 
   test("jdbc sink writes batched rows readable back through jdbc (S15)") {
@@ -301,9 +302,9 @@ class ExportStateSpec extends AnyFunSuite {
       "relation \"era_status\" already exists", "42P07")))
   }
 
-  test("mixed legacy+current state log coalesces NULL writer_id to empty") {
+  testOnEveryRoot("mixed legacy+current state log coalesces NULL writer_id to empty") {
+      (dir, _) =>
     import spark.implicits._
-    val dir = tmpDir("state-mixed")
     val logDir = s"$dir/era_completion"
     // a legacy log file written before writer_id existed: same columns
     // minus writer_id (mergeSchema will surface the column as NULL here)
@@ -326,8 +327,9 @@ class ExportStateSpec extends AnyFunSuite {
     assert(state.eraStatus.count() === 2)
   }
 
-  test("state machine: start → completed/failed, latest-state view, retry counts") {
-    val state = new EraStateManager(spark, tmpDir("state"))
+  testOnEveryRoot("state machine: start → completed/failed, latest-state view, retry counts") {
+      (dir, _) =>
+    val state = new EraStateManager(spark, dir)
     state.recordEraStart(100, "gnosis")
     state.recordEraCompletion(100, "gnosis", Seq("blocks", "attestations"), 555)
     state.recordEraStart(101, "gnosis")
@@ -350,8 +352,8 @@ class ExportStateSpec extends AnyFunSuite {
     assert(row.getAs[Long]("slot_end") === 101L * 8192 - 1)
   }
 
-  test("resume anti-join skips completed eras only (P6/J4)") {
-    val state = new EraStateManager(spark, tmpDir("state2"))
+  testOnEveryRoot("resume anti-join skips completed eras only (P6/J4)") { (dir, _) =>
+    val state = new EraStateManager(spark, dir)
     state.recordEraCompletion(10, "gnosis", Seq("blocks"), 1)
     state.recordEraCompletion(12, "gnosis", Seq("blocks"), 1)
     state.recordEraFailure(13, "gnosis", "x") // failed → still to-process
@@ -361,8 +363,8 @@ class ExportStateSpec extends AnyFunSuite {
     assert(state.determineErasToProcess(Seq(10L), "mainnet") === Seq(10L))
   }
 
-  test("summary aggregates by current status (A5)") {
-    val state = new EraStateManager(spark, tmpDir("state3"))
+  testOnEveryRoot("summary aggregates by current status (A5)") { (dir, _) =>
+    val state = new EraStateManager(spark, dir)
     state.recordEraCompletion(1, "gnosis", Seq("blocks"), 100)
     state.recordEraCompletion(2, "gnosis", Seq("blocks"), 200)
     state.recordEraFailure(3, "gnosis", "x")
@@ -372,16 +374,17 @@ class ExportStateSpec extends AnyFunSuite {
     assert(sum_("failed") === ((1L, 0L)))
   }
 
-  test("missingEras reports coverage gaps inside the completed span") {
-    val state = new EraStateManager(spark, tmpDir("state6"))
+  testOnEveryRoot("missingEras reports coverage gaps inside the completed span") { (dir, _) =>
+    val state = new EraStateManager(spark, dir)
     assert(state.missingEras("gnosis") === Nil) // empty log
     Seq(10L, 11L, 14L, 16L).foreach(e => state.recordEraCompletion(e, "gnosis", Seq("blocks"), 1))
     state.recordEraFailure(15, "gnosis", "x") // failed ≠ completed
     assert(state.missingEras("gnosis") === Seq(12L, 13L, 15L))
   }
 
-  test("optimize compacts the log to latest-version rows, preserving status") {
-    val state = new EraStateManager(spark, tmpDir("state5"))
+  testOnEveryRoot("optimize compacts the log to latest-version rows, preserving status") {
+      (dir, _) =>
+    val state = new EraStateManager(spark, dir)
     state.recordEraStart(1, "gnosis")
     state.recordEraFailure(1, "gnosis", "x")
     state.recordEraStart(1, "gnosis")
@@ -394,28 +397,50 @@ class ExportStateSpec extends AnyFunSuite {
     assert(status(1L) === "completed" && status(2L) === "processing")
   }
 
-  test("force-clean removes the era's partitions and state rows") {
+  testOnEveryRoot("force-clean removes the era's partitions and state rows") { (root, local) =>
     import spark.implicits._
-    val stateDir = tmpDir("state4")
-    val dataRoot = tmpDir("data")
-    val state = new EraStateManager(spark, stateDir)
+    val (dataRoot, dataDir) = (s"$root/data", s"$local/data")
+    val state = new EraStateManager(spark, s"$root/state")
     // era-partitioned dataset layout
     Seq((1L, 5L)).toDF("slot", "era_number").write
       .partitionBy("era_number").parquet(s"$dataRoot/blocks")
-    assert(Files.exists(Paths.get(s"$dataRoot/blocks/era_number=5")))
+    assert(Files.exists(Paths.get(s"$dataDir/blocks/era_number=5")))
     state.recordEraCompletion(5, "gnosis", Seq("blocks"), 1)
     state.recordEraCompletion(6, "gnosis", Seq("blocks"), 1)
 
     // era-suffixed CLI layout partials must be cleaned too
-    Files.createDirectories(Paths.get(s"$dataRoot/all_era_00005_blocks.parquet"))
-    Files.write(Paths.get(s"$dataRoot/all_era_00005_blocks.parquet/part-0.parquet"),
+    Files.createDirectories(Paths.get(s"$dataDir/all_era_00005_blocks.parquet"))
+    Files.write(Paths.get(s"$dataDir/all_era_00005_blocks.parquet/part-0.parquet"),
       Array[Byte](1, 2, 3))
-    Files.createDirectories(Paths.get(s"$dataRoot/all_era_00006_blocks.parquet"))
+    Files.createDirectories(Paths.get(s"$dataDir/all_era_00006_blocks.parquet"))
 
     state.cleanEraCompletely(dataRoot, "gnosis", 5)
-    assert(!Files.exists(Paths.get(s"$dataRoot/blocks/era_number=5")))
-    assert(!Files.exists(Paths.get(s"$dataRoot/all_era_00005_blocks.parquet")))
-    assert(Files.exists(Paths.get(s"$dataRoot/all_era_00006_blocks.parquet"))) // other eras untouched
+    assert(!Files.exists(Paths.get(s"$dataDir/blocks/era_number=5")))
+    assert(!Files.exists(Paths.get(s"$dataDir/all_era_00005_blocks.parquet")))
+    assert(Files.exists(Paths.get(s"$dataDir/all_era_00006_blocks.parquet"))) // other eras untouched
     assert(state.determineErasToProcess(Seq(5L, 6L), "gnosis") === Seq(5L))
+  }
+
+  /** An era source that fails before anything is written. */
+  private val noEra: Long => org.apache.spark.sql.DataFrame =
+    _ => throw new IllegalStateException("no era source")
+
+  testOnEveryRoot("incremental force-clean defaults to the output's parent directory") {
+      (root, local) =>
+    val state = new EraStateManager(spark, s"$root/state")
+    val partial = Paths.get(s"$local/out/x_era_00005_blocks.parquet")
+    Files.createDirectories(partial)
+    assert(IncrementalExporter.run(spark, state, "gnosis", Seq(5L), s"$root/out/x.parquet",
+      force = true)(noEra) === Nil)
+    assert(!Files.exists(partial), "the killed run's partial output survived the force-clean")
+    assert(state.failedEras("gnosis") === Seq(5L))
+  }
+
+  test("an output named without a directory cleans in the working directory") {
+    val state = new EraStateManager(spark, tmpDir("state-bare"))
+    // era 99999: nothing in the working directory carries its tag
+    assert(IncrementalExporter.run(spark, state, "gnosis", Seq(99999L), "x.parquet",
+      force = true)(noEra) === Nil)
+    assert(state.failedEras("gnosis") === Seq(99999L))
   }
 }

@@ -18,7 +18,6 @@ class RemoteSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private var server: HttpServer = _
   private var baseUrl: String = _
-  private var eraBytes: Map[String, Array[Byte]] = _
   @volatile private var failNextDownloads = 0
   @volatile private var s3Enabled = true
   @volatile private var htmlEnabled = true
@@ -27,7 +26,11 @@ class RemoteSpec extends AnyFunSuite with BeforeAndAfterAll {
   private val names = Seq(
     "gnosis-00000-aabb0001.era", "gnosis-00012-aabb0002.era", "gnosis-01267-aabb0003.era")
 
-  override def beforeAll(): Unit = {
+  /** The served files' bytes, read from the reference fixture on first
+    * use. The listings and HEAD probes answer from `names` alone, so only
+    * the tests that download need the fixture; each of them reads this
+    * first, so without the fixture it fails on its own. */
+  private lazy val eraBytes: Map[String, Array[Byte]] = {
     val dir = EraFixtures.ensureGenerated()
     // serve the same three fixture eras as before the corpus grew to 7
     // files (slot 98300 lands in era 11; the served name claims 12 — only
@@ -36,8 +39,10 @@ class RemoteSpec extends AnyFunSuite with BeforeAndAfterAll {
       new File(dir).listFiles().find(_.getName.startsWith(prefix))
         .getOrElse(fail(s"fixture era $prefix missing"))
     }
-    eraBytes = names.zip(files.map(f => Files.readAllBytes(f.toPath))).toMap
+    names.zip(files.map(f => Files.readAllBytes(f.toPath))).toMap
+  }
 
+  override def beforeAll(): Unit = {
     server = HttpServer.create(new InetSocketAddress(0), 0)
     server.createContext("/", new HttpHandler {
       def handle(ex: HttpExchange): Unit = {
@@ -65,15 +70,10 @@ class RemoteSpec extends AnyFunSuite with BeforeAndAfterAll {
             }
           } else {
             val name = path.stripPrefix("/")
-            eraBytes.get(name) match {
-              case Some(bytes) if ex.getRequestMethod == "HEAD" =>
-                ex.sendResponseHeaders(200, -1); ex.close()
-              case Some(bytes) =>
-                if (failNextDownloads > 0) { failNextDownloads -= 1; respond(ex, 503, "retry".getBytes) }
-                else respond(ex, 200, bytes)
-              case None =>
-                ex.sendResponseHeaders(404, -1); ex.close()
-            }
+            if (!names.contains(name)) { ex.sendResponseHeaders(404, -1); ex.close() }
+            else if (ex.getRequestMethod == "HEAD") { ex.sendResponseHeaders(200, -1); ex.close() }
+            else if (failNextDownloads > 0) { failNextDownloads -= 1; respond(ex, 503, "retry".getBytes) }
+            else respond(ex, 200, eraBytes(name))
           }
         } catch { case e: Exception => respond(ex, 500, e.toString.getBytes) }
       }
@@ -119,10 +119,11 @@ class RemoteSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("download streams to cache, retries transient failures, reuses cache (S9)") {
+    val served = eraBytes
     val dest = Files.createTempDirectory("era-dl").toString
     failNextDownloads = 2 // two 503s, then success — inside retry budget
     val p = RemoteDiscovery.download(s"$baseUrl/${names.head}", dest)
-    assert(Files.readAllBytes(p).sameElements(eraBytes(names.head)))
+    assert(Files.readAllBytes(p).sameElements(served(names.head)))
     // cache hit: server failure now irrelevant
     failNextDownloads = 99
     val p2 = RemoteDiscovery.download(s"$baseUrl/${names.head}", dest)
@@ -139,6 +140,7 @@ class RemoteSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("--remote CLI runs the full incremental ETL and resumes idempotently") {
+    eraBytes
     val work = Files.createTempDirectory("remote-e2e")
     val out = s"$work/out/all.parquet"
     val args = Array("--remote", baseUrl, "gnosis", "0+", "all-blocks", out,
@@ -162,6 +164,7 @@ class RemoteSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("--remote with no URL falls back to ERA_BASE_URL from .env (env entry point)") {
+    eraBytes
     val work = Files.createTempDirectory("remote-env")
     val envFile = Paths.get(s"$work/.env")
     Files.writeString(envFile,
@@ -187,6 +190,7 @@ class RemoteSpec extends AnyFunSuite with BeforeAndAfterAll {
     // The era-1267 file is the one whose served NAME matches its content
     // (slot 10379290 ∈ era 1267); the other two served names lie about
     // their eras, so file pruning drops them for this slot — also asserted.
+    eraBytes
     val spark = org.apache.spark.sql.SparkSession.builder()
       .master("local[2]")
       .config("spark.sql.shuffle.partitions", "2")
@@ -238,6 +242,7 @@ class RemoteSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("downloaded era files decode through the full pipeline") {
+    eraBytes
     val spark = org.apache.spark.sql.SparkSession.builder()
       .master("local[2]")
       .config("spark.sql.shuffle.partitions", "2")
