@@ -75,9 +75,6 @@ class EraStateManager(spark: SparkSession, stateDir: String) {
   // the latest-state argmax nondeterministic
   private val writerId = java.util.UUID.randomUUID().toString
 
-  /** Dataset names — mirrors era_state_manager.py:30-36. */
-  val allDatasets: Seq[String] = graft.operators.Normalizer.datasetNames
-
   private def nextVersion(): Long =
     versionCounter.updateAndGet(prev => math.max(prev + 1, System.currentTimeMillis()))
 
@@ -113,18 +110,17 @@ class EraStateManager(spark: SparkSession, stateDir: String) {
   def recordEraFailure(era: Long, network: String, error: String): Unit =
     appendRow(network, era, "failed", 0, Nil, error, retryCount(era, network) + 1)
 
-  /** Raw append-only log (empty DataFrame with full schema if none yet).
-    * Logs written before the writer_id column existed are upgraded on read
-    * with an empty discriminator (sorts last in the tie-break). A mixed
-    * old+new log needs the coalesce, not just the add-column: mergeSchema
-    * surfaces the column but reads legacy files' rows as NULL. */
+  /** Raw append-only log (empty DataFrame with full schema if none yet),
+    * read with its known [[EraStateManager.logSchema]], so planning the
+    * read opens none of the one-row files to infer or merge a schema.
+    * Files written before the writer_id column existed read that column
+    * as NULL, which becomes the empty discriminator (sorts last in the
+    * tie-break). */
   def log: DataFrame =
-    if (logExists) {
-      val df = spark.read.option("mergeSchema", "true").parquet(logPath)
-      if (df.columns.contains("writer_id"))
-        df.withColumn("writer_id", coalesce(col("writer_id"), lit("")))
-      else df.withColumn("writer_id", lit(""))
-    } else spark.createDataFrame(
+    if (logExists)
+      spark.read.schema(EraStateManager.logSchema).parquet(logPath)
+        .withColumn("writer_id", coalesce(col("writer_id"), lit("")))
+    else spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       EraStateManager.logSchema)
 
@@ -192,9 +188,9 @@ class EraStateManager(spark: SparkSession, stateDir: String) {
     * keeping only the latest-version row per (network, era_number). */
   def optimize(): Unit = {
     if (!logExists) return
-    val schema = log.schema
     val latest = eraStatus.collect().toSeq
-    spark.createDataFrame(spark.sparkContext.parallelize(latest, 1), schema)
+    spark.createDataFrame(spark.sparkContext.parallelize(latest, 1),
+        EraStateManager.logSchema)
       .write.mode("overwrite").parquet(logPath)
   }
 
@@ -205,8 +201,10 @@ class EraStateManager(spark: SparkSession, stateDir: String) {
   def cleanEraCompletely(dataRoot: String, network: String, era: Long): Unit = {
     val root = new Path(dataRoot)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // partitioned layout: <root>/<dataset>/era_number=<era>
-    allDatasets.foreach(ds => fs.delete(new Path(root, s"$ds/era_number=$era"), true))
+    // partitioned layout: <root>/<table>/era_number=<era>, for each of the
+    // 16 warehouse tables
+    StagedExport.warehouseTableNames.foreach(t =>
+      fs.delete(new Path(root, s"$t/era_number=$era"), true))
     // era-suffixed CLI layout: <root>/..._era_<00000>_<dataset>.<ext>
     // (Sinks.eraOutputFilename) — a failed era's partial outputs must go too
     val eraTag = f"_era_$era%05d"
@@ -216,11 +214,10 @@ class EraStateManager(spark: SparkSession, stateDir: String) {
     if (logExists) {
       // the log is tiny (rows ∝ state transitions) — materialize on the
       // driver, then overwrite; avoids writing over a lazily-read source
-      val schema = log.schema
       val kept = log.filter(!(col("network") === network && col("era_number") === era))
         .collect().toSeq
       spark.createDataFrame(
-          spark.sparkContext.parallelize(kept, 1), schema)
+          spark.sparkContext.parallelize(kept, 1), EraStateManager.logSchema)
         .write.mode("overwrite").parquet(logPath)
     }
   }

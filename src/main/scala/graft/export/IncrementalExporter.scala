@@ -168,10 +168,10 @@ object IncrementalExporter {
       // per-table counts ride the write jobs as observed metrics
       // (Sinks.writeCounted), so completion bookkeeping costs ZERO
       // post-write jobs (WarehouseResumeSpec asserts no read-back count
-      // runs). wide_blocks is still EXCLUDED from the completion record:
-      // it re-shapes the same blocks, and counting it would make
-      // total_records diverge from the file-mode loop's accounting for
-      // the same era.
+      // runs). The completion record counts the 15 datasets only, not
+      // wide_blocks: it re-shapes the same blocks, and counting it would
+      // make total_records diverge from the file-mode loop's accounting
+      // for the same era.
       val written = Sinks.runQuiescent(spark, tables.map {
         case (name, df) => () =>
           val part = s"$netDir/$name/era_number=$era"
@@ -183,7 +183,7 @@ object IncrementalExporter {
           }
       })
       val counts = tables.map(_._1).zip(written)
-        .filter(_._1 != "wide_blocks").toMap
+        .filter { case (name, _) => Normalizer.datasetNames.contains(name) }.toMap
       rowBytes ++= counts.flatMap { case (name, rows) =>
         if (rows <= 0) None
         else {

@@ -9,15 +9,13 @@ import org.apache.spark.sql.functions.{count, lit}
  * reference's export surface (the `era_parser/export` package,
  * `core/output_manager.py:21-42`) with Spark-native writers:
  *
- *  - JSON/JSONL  → `df.write.json` (native JSONL; the reference's metadata
- *    envelope becomes a `_era_metadata.json` sidecar so the write itself
- *    stays distributed — a whole-array JSON file with an inline header
- *    cannot be written in parallel)
- *  - CSV         → `df.write.csv(header=true)` (the reference's `#` comment
- *    preamble also moves to the sidecar: commented preambles break most
- *    CSV readers anyway)
- *  - Parquet     → `df.write.parquet` + sidecar for the reference's
- *    pyarrow KV metadata (parquet_exporter.py:31-69)
+ *  - JSON/JSONL  → `df.write.json` (native JSONL, no metadata envelope, so
+ *    the write itself stays distributed — a whole-array JSON file with an
+ *    inline header cannot be written in parallel)
+ *  - CSV         → `df.write.csv(header=true)` (no `#` comment preamble:
+ *    commented preambles break most CSV readers anyway)
+ *  - Parquet     → `df.write.parquet`, without the reference's pyarrow KV
+ *    metadata (parquet_exporter.py:31-69)
  *  - ClickHouse  → JDBC batch writer, batch 100k + retry ×3 w/ exponential
  *    backoff (clickhouse_service.py:17,135-162)
  *
@@ -25,9 +23,9 @@ import org.apache.spark.sql.functions.{count, lit}
  * distributed-native shape. At 100 TB one file per sink is a non-goal;
  * downstream consumers read the directory; the opt-in `--parity`
  * envelope ([[Sinks.writeWithEnvelope]]) is the one single-file shape.
- * Outputs may be on any Hadoop filesystem: the sidecar, SUMMARY and
- * envelope files go through the `FileSystem` bound to the output's URI,
- * like Spark's own writes.
+ * Outputs may be on any Hadoop filesystem: the SUMMARY and envelope files
+ * go through the `FileSystem` bound to the output's URI, like Spark's own
+ * writes.
  */
 object Sinks {
 
@@ -56,19 +54,13 @@ object Sinks {
   }
 
   /** Write one DataFrame in the format implied by the extension. Returns
-    * the row count (also written to the sidecar), taken from the write job
-    * itself ([[writeCounted]]): the data is computed exactly once, no read
-    * job follows the write, and the count is the rows actually committed
-    * even for a nondeterministic frame. */
-  def write(df: DataFrame, path: String,
-      metadata: Map[String, String] = Map.empty): Long = {
+    * the row count, taken from the write job itself ([[writeCounted]]):
+    * the data is computed exactly once, no read job follows the write, and
+    * the count is the rows actually committed even for a nondeterministic
+    * frame. */
+  def write(df: DataFrame, path: String): Long = {
     val fmt = formatOf(path)
-    val n = writeCounted(df)(writeAs(_, fmt, path))(readBack(df, fmt, path))
-    // the reference's per-file KV metadata (era number, network, slot
-    // range — parquet_exporter.py:40-55) as a sidecar inside the output dir
-    if (metadata.nonEmpty) writeText(df.sparkSession, new Path(path, "_era_metadata.json"),
-      jsonObject(metadata + ("rows" -> n.toString)))
-    n
+    writeCounted(df)(writeAs(_, fmt, path))(readBack(df, fmt, path))
   }
 
   /** csv carries its header line; the option is inert for the others. */
@@ -134,10 +126,12 @@ object Sinks {
     * (json_exporter.py:31-41) or a CSV `#` comment preamble
     * (csv_exporter.py:30-45) — followed by the data. Opt-in (`--parity`)
     * because an inline header forces one file: the distributed default
-    * keeps the envelope in a sidecar so the write itself parallelizes.
-    * Returns the row count. */
-  def writeWithEnvelope(df: DataFrame, path: String, dataType: String,
-      eraInfo: Map[String, String] = Map.empty): Long = {
+    * writes no envelope, so the write itself parallelizes. The era, slot
+    * range and network of the reference's envelope are not known to a
+    * single-path extract: the JSON `era_info` is `{}` and the CSV preamble
+    * reads `# Era ?` and `# Network: ?`, with no `# Slots` line. Returns
+    * the row count. */
+  def writeWithEnvelope(df: DataFrame, path: String, dataType: String): Long = {
     val fmt = formatOf(path)
     require(fmt == "json" || fmt == "csv", s"envelope parity applies to csv/json, not $fmt")
     val tmp = new Path(s"$path.__parts")
@@ -149,18 +143,11 @@ object Sinks {
     val ts = java.time.OffsetDateTime.now(java.time.ZoneOffset.UTC)
       .format(java.time.format.DateTimeFormatter.ISO_OFFSET_DATE_TIME)
     val envelope =
-      if (fmt == "json") {
-        s"""{"era_info": ${jsonObject(eraInfo)}, "data_type": "${esc(dataType)}", "record_count": $n, "export_timestamp": "$ts", "type": "metadata"}\n"""
-      } else {
-        val era = eraInfo.getOrElse("era_number", "?")
-        val slots = (eraInfo.get("start_slot"), eraInfo.get("end_slot")) match {
-          case (Some(a), Some(b)) => s"# Slots: $a - $b\n"
-          case _ => ""
-        }
-        s"# Era $era: $dataType data\n" + slots +
-          s"# Network: ${eraInfo.getOrElse("network", "?")}\n" +
+      if (fmt == "json")
+        s"""{"era_info": {}, "data_type": "${esc(dataType)}", "record_count": $n, "export_timestamp": "$ts", "type": "metadata"}\n"""
+      else
+        s"# Era ?: $dataType data\n# Network: ?\n" +
           s"# Export timestamp: $ts\n# Total records: $n\n"
-      }
     val out = fs.create(new Path(path), true)
     try {
       out.write(envelope.getBytes("UTF-8"))
@@ -176,11 +163,6 @@ object Sinks {
   def supportsEnvelope(path: String): Boolean = {
     val f = formatOf(path); f == "json" || f == "csv"
   }
-
-  /** `m` as a flat JSON object of strings, keys sorted. */
-  private def jsonObject(m: Map[String, String]): String =
-    m.toSeq.sortBy(_._1).map { case (k, v) => s""""${esc(k)}": "${esc(v)}"""" }
-      .mkString("{", ", ", "}")
 
   /** Create or overwrite the file `path` with `text`, UTF-8, through the
     * `FileSystem` bound to its URI (missing parents are created). */
@@ -213,14 +195,13 @@ object Sinks {
     * counts and SUMMARY against the per-table reference. */
   def exportSeparateFiles(
       datasets: Map[String, DataFrame],
-      baseOutput: String,
-      metadata: Map[String, String] = Map.empty): Map[String, (Long, Double)] = {
+      baseOutput: String): Map[String, (Long, Double)] = {
     val entries = datasets.toSeq.sortBy(_._1)
     val spark = entries.head._2.sparkSession
     val timed = entries.map(_._1).zip(runQuiescent(spark, entries.map {
       case (name, df) => () => {
         val t0 = System.nanoTime()
-        val rows = write(df, datasetFilename(baseOutput, name), metadata)
+        val rows = write(df, datasetFilename(baseOutput, name))
         (rows, (System.nanoTime() - t0) / 1e9)
       }
     }))

@@ -1,6 +1,7 @@
 package graft.export
 
-import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.functions.expr
 
 import graft.model.DecodedBlock
 import graft.operators.Normalizer
@@ -75,33 +76,28 @@ object StagedExport {
     if (fs.exists(p)) fs.delete(p, true)
   }
 
-  /** The warehouse's table set — the 15 normalized datasets plus the wide
-    * shape. ONE definition shared by the warehouse loop, compaction and
-    * the specs so a table rename can't drift across them. */
+  /** The names of the warehouse's 16 tables ([[Normalizer.warehouseTables]]). */
   private[graft] val warehouseTableNames: Seq[String] =
-    Normalizer.datasetNames :+ "wide_blocks"
+    Normalizer.warehouseTables.map(_.name)
 
-  /** One network's warehouse tables (15 children + blocks + wide shape),
-    * each with the `era_number` partition key attached ARITHMETICALLY
-    * (era = slot div slots_per_historical_root, the reference's own
-    * era↔slot identity — EraSlots.eraOfSlot) rather than joining the
-    * blocks frame back in: a narrow per-row projection instead of a
-    * slot-equi join whose build side is the whole block archive at
-    * 100 TB. The identity is per-network (the slot geometry comes from
-    * [[graft.config.Networks]]); decode-vs-arithmetic agreement is
-    * spec-pinned in `EraWarehouseSpec`. Multi-network: the reference's
-    * state layer keys every row on network (`era_state_manager.py:350-377`),
-    * so one store holds many networks, each in its own subtree because the
-    * slot geometry is the network's. Used by the per-era
-    * [[IncrementalExporter.runWarehouse]] loop. */
+  /** One network's 16 warehouse tables ([[Normalizer.warehouseTables]]),
+    * each with the `era_number` partition key appended by the same rule,
+    * ARITHMETICALLY (era = slot div slots_per_historical_root, the
+    * reference's own era↔slot identity — EraSlots.eraOfSlot): never from
+    * the era file's name, which need not carry the era, and never by
+    * joining the blocks frame back in, which would be a slot-equi join
+    * whose build side is the whole block archive at 100 TB. The identity
+    * is per-network (the slot geometry comes from [[graft.config.Networks]]);
+    * decode-vs-arithmetic agreement is spec-pinned in `EraWarehouseSpec`.
+    * Multi-network: the reference's state layer keys every row on network
+    * (`era_state_manager.py:350-377`), so one store holds many networks,
+    * each in its own subtree because the slot geometry is the network's.
+    * Used by the per-era [[IncrementalExporter.runWarehouse]] loop. */
   private[export] def networkTables(blocks: Dataset[DecodedBlock],
-      network: String): Seq[(String, org.apache.spark.sql.DataFrame)] = {
+      network: String): Seq[(String, DataFrame)] = {
     val spr = graft.config.Networks(network).slotsPerHistoricalRoot
-    def withEra(df: org.apache.spark.sql.DataFrame) =
-      df.withColumn("era_number",
-        org.apache.spark.sql.functions.expr(s"slot div $spr"))
-    Normalizer.allDatasets(blocks).toSeq.sortBy(_._1)
-      .map { case (n, df) => n -> withEra(df) } :+
-      ("wide_blocks" -> Normalizer.wideBlocksWithEra(blocks))
+    Normalizer.warehouseTables.map { t =>
+      t.name -> t.project(blocks).withColumn("era_number", expr(s"slot div $spr"))
+    }
   }
 }

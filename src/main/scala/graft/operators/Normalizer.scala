@@ -12,6 +12,11 @@ import graft.model.DecodedBlock
  * Decode + normalize: raw era records → decoded block Dataset → the 15
  * normalized relational tables (SURVEY.md §1.3, §2.4).
  *
+ * The table set is defined once, as the catalog [[datasets]]: each entry
+ * names a table, the body sections it reads and its projection.
+ * [[warehouseTables]] adds the wide single-file shape, making the 16
+ * tables the warehouse, its views, compaction and force-clean share.
+ *
  * Every child extraction is a pure `DataFrame => DataFrame` of
  * `select`/`posexplode` over the nested block schema — a narrow, shuffle-free
  * map stage at any scale. Child rows inherit parent context by projection
@@ -25,35 +30,46 @@ import graft.model.DecodedBlock
  */
 object Normalizer {
 
-  /** All 15 dataset names in the reference's order
-    * (era_state_manager.py:30-36). */
-  val datasetNames: Seq[String] = Seq(
-    "blocks", "sync_aggregates", "execution_payloads", "transactions",
-    "withdrawals", "attestations", "deposits", "voluntary_exits",
-    "proposer_slashings", "attester_slashings", "bls_changes",
-    "blob_commitments", "deposit_requests", "withdrawal_requests",
-    "consolidation_requests")
+  /** One table of the catalog: its name, the body sections its projection
+    * reads (the header, eth1 data, graffiti, randao and timestamp are
+    * always decoded, so `blocks` needs no variable section at all), and
+    * the projection from the decoded blocks. */
+  final case class Table(name: String, sections: Set[String],
+      project: Dataset[DecodedBlock] => DataFrame)
 
-  /** Body sections each table's projection actually reads — the
-    * column-pruning map for [[decodeBlocks]] (the header, eth1 data,
-    * graffiti, randao, and timestamp are always decoded; `blocks` needs no
-    * variable section at all). */
-  val sectionsFor: Map[String, Set[String]] = Map(
-    "blocks" -> Set.empty,
-    "sync_aggregates" -> Set("sync_aggregate"),
-    "execution_payloads" -> Set("execution_payload"),
-    "transactions" -> Set("execution_payload"),
-    "withdrawals" -> Set("execution_payload"),
-    "attestations" -> Set("attestations"),
-    "deposits" -> Set("deposits"),
-    "voluntary_exits" -> Set("voluntary_exits"),
-    "proposer_slashings" -> Set("proposer_slashings"),
-    "attester_slashings" -> Set("attester_slashings"),
-    "bls_changes" -> Set("bls_to_execution_changes"),
-    "blob_commitments" -> Set("blob_kzg_commitments"),
-    "deposit_requests" -> Set("execution_requests"),
-    "withdrawal_requests" -> Set("execution_requests"),
-    "consolidation_requests" -> Set("execution_requests"))
+  /** The 15 normalized datasets in the reference's order
+    * (era_state_manager.py:30-36) — the one definition of the table set.
+    * [[datasetNames]], [[sectionsFor]], [[dataset]] and [[allDatasets]]
+    * derive from it, and [[warehouseTables]] extends it. */
+  val datasets: Seq[Table] = Seq(
+    Table("blocks", Set.empty, blocksTable),
+    Table("sync_aggregates", Set("sync_aggregate"), syncAggregates),
+    Table("execution_payloads", Set("execution_payload"), executionPayloads),
+    Table("transactions", Set("execution_payload"), transactions),
+    Table("withdrawals", Set("execution_payload"), withdrawals),
+    Table("attestations", Set("attestations"), attestations),
+    Table("deposits", Set("deposits"), deposits),
+    Table("voluntary_exits", Set("voluntary_exits"), voluntaryExits),
+    Table("proposer_slashings", Set("proposer_slashings"), proposerSlashings),
+    Table("attester_slashings", Set("attester_slashings"), attesterSlashings),
+    Table("bls_changes", Set("bls_to_execution_changes"), blsChanges),
+    Table("blob_commitments", Set("blob_kzg_commitments"), blobCommitments),
+    Table("deposit_requests", Set("execution_requests"), depositRequests),
+    Table("withdrawal_requests", Set("execution_requests"), withdrawalRequests),
+    Table("consolidation_requests", Set("execution_requests"), consolidationRequests))
+
+  /** The 16 tables the warehouse stores and the views bind: the 15
+    * datasets plus the wide single-file shape, which reads every section.
+    * None carries `era_number`; the warehouse adds it to all 16 alike
+    * ([[graft.export.StagedExport.networkTables]]). */
+  val warehouseTables: Seq[Table] =
+    datasets :+ Table("wide_blocks", datasets.flatMap(_.sections).toSet, wideBlocks)
+
+  val datasetNames: Seq[String] = datasets.map(_.name)
+
+  /** The column-pruning map for [[decodeBlocks]]. */
+  val sectionsFor: Map[String, Set[String]] =
+    datasets.map(t => t.name -> t.sections).toMap
 
   /** Decode raw era records (format("era") output) into the nested block
     * Dataset. Narrow mapPartitions — decode happens once; all 15 child
@@ -97,28 +113,13 @@ object Normalizer {
   /** Extract one named dataset; lazy evaluation prunes everything else —
     * unlike the reference's compute-all-then-select
     * (processor.py:401-404, SURVEY.md §2.2 P4). */
-  def dataset(blocks: Dataset[DecodedBlock], name: String): DataFrame = name match {
-    case "blocks" => blocksTable(blocks)
-    case "sync_aggregates" => syncAggregates(blocks)
-    case "execution_payloads" => executionPayloads(blocks)
-    case "transactions" => transactions(blocks)
-    case "withdrawals" => withdrawals(blocks)
-    case "attestations" => attestations(blocks)
-    case "deposits" => deposits(blocks)
-    case "voluntary_exits" => voluntaryExits(blocks)
-    case "proposer_slashings" => proposerSlashings(blocks)
-    case "attester_slashings" => attesterSlashings(blocks)
-    case "bls_changes" => blsChanges(blocks)
-    case "blob_commitments" => blobCommitments(blocks)
-    case "deposit_requests" => depositRequests(blocks)
-    case "withdrawal_requests" => withdrawalRequests(blocks)
-    case "consolidation_requests" => consolidationRequests(blocks)
-    case other => throw new IllegalArgumentException(
-      s"Unknown dataset: $other. Available: ${datasetNames.mkString(", ")}")
-  }
+  def dataset(blocks: Dataset[DecodedBlock], name: String): DataFrame =
+    datasets.find(_.name == name).getOrElse(throw new IllegalArgumentException(
+      s"Unknown dataset: $name. Available: ${datasetNames.mkString(", ")}"))
+      .project(blocks)
 
   def allDatasets(blocks: Dataset[DecodedBlock]): Map[String, DataFrame] =
-    datasetNames.map(n => n -> dataset(blocks, n)).toMap
+    datasets.map(t => t.name -> t.project(blocks)).toMap
 
   /** processor.py:143-156 */
   def blocksTable(blocks: Dataset[DecodedBlock]): DataFrame =
@@ -385,13 +386,6 @@ object Normalizer {
     * (export/base.py:59-153): projection + count columns + JSON-embedded
     * children. */
   def wideBlocks(blocks: Dataset[DecodedBlock]): DataFrame =
-    wideBlocksWithEra(blocks).drop("era_number")
-
-  /** [[wideBlocks]] + the `era_number` partition key appended — the shape
-    * the at-rest warehouse stores ([[graft.export.IncrementalExporter.runWarehouse]]
-    * partitions every table by era; the wide projection is the only one
-    * that doesn't already carry the key). */
-  def wideBlocksWithEra(blocks: Dataset[DecodedBlock]): DataFrame =
     blocks.select(
       col("slot"),
       col("proposer_index"),
@@ -443,6 +437,5 @@ object Normalizer {
       coalesce(size(col("body.execution_payload.withdrawals")), lit(0)).cast("long").as("withdrawal_count"),
       coalesce(size(col("body.execution_requests.deposits")), lit(0)).cast("long").as("deposit_request_count"),
       coalesce(size(col("body.execution_requests.withdrawals")), lit(0)).cast("long").as("withdrawal_request_count"),
-      coalesce(size(col("body.execution_requests.consolidations")), lit(0)).cast("long").as("consolidation_request_count"),
-      col("era_number"))
+      coalesce(size(col("body.execution_requests.consolidations")), lit(0)).cast("long").as("consolidation_request_count"))
 }

@@ -36,12 +36,6 @@ object EraOracle {
   /** DuckDB table expression for one exported table. */
   private def t(name: String): String = s"read_parquet('$dir/$name/*.parquet')"
 
-  /** All exported table names: the 15 normalized tables plus the raw-record
-    * scan (`records`), the block fork/size metadata the normalized `blocks`
-    * projection drops (`block_meta`), and the wide single-file shape. */
-  val exportedTables: Seq[String] =
-    Normalizer.datasetNames ++ Seq("records", "block_meta", "wide_blocks")
-
   /** Write every exported table as single-file parquet under [[dir]].
     * Fixture-era scale (a few thousand rows total) — coalesce(1) keeps the
     * DuckDB glob trivial; production exports go through [[graft.export.Sinks]]
@@ -50,13 +44,12 @@ object EraOracle {
     val blocks = EraQueries.blocks(spark)
     def write(name: String)(df: org.apache.spark.sql.DataFrame): Unit =
       df.coalesce(1).write.mode("overwrite").parquet(s"$dir/$name")
-    Normalizer.allDatasets(blocks).foreach { case (n, df) => write(n)(df) }
+    Normalizer.warehouseTables.foreach(w => write(w.name)(w.project(blocks)))
     write("records")(
       spark.read.format("era").load(EraFixtures.ensureGenerated())
         .select("slot", "record_type"))
     write("block_meta")(blocks.toDF().select(
       "slot", "era_number", "version", "compressed_size", "decompressed_size"))
-    write("wide_blocks")(Normalizer.wideBlocks(blocks))
     // mainnet fixture corpus: the oracle recomputes the fork/timestamp
     // ladder from `slot` alone (+ payload time when present), so only the
     // minimal columns are exported — nothing the ladder query asserts is
@@ -84,10 +77,8 @@ object EraOracle {
     * to HUGEINT and fail the driver's schema compare). */
   def oracleSql: Map[String, String] = {
     val passthrough: Map[String, String] =
-      (Normalizer.datasetNames.map(n => s"era_$n" -> t(n)) :+
-        ("era_wide_blocks" -> t("wide_blocks")))
-        .map { case (q, tbl) => q -> s"SELECT * FROM $tbl ORDER BY slot" }
-        .toMap
+      Normalizer.warehouseTables
+        .map(w => s"era_${w.name}" -> s"SELECT * FROM ${t(w.name)} ORDER BY slot").toMap
 
     passthrough ++ Map(
       "era_stats" ->

@@ -65,12 +65,13 @@ object EraQueries {
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = {
-    // every normalized table is directly a query (the 15-way explode is the
-    // reference's core "query" — processor.py:101-399)
+    // every warehouse table is directly a query: the 15-way explode is the
+    // reference's core "query" (processor.py:101-399), and the wide
+    // single-file all-blocks shape is its export (export/base.py:59-153)
     val tables: Map[String, (SparkSession, String) => DataFrame] =
-      Normalizer.datasetNames.map { name =>
-        s"era_$name" -> ((s: SparkSession, _: String) =>
-          Normalizer.dataset(blocks(s), name).orderBy("slot"))
+      Normalizer.warehouseTables.map { t =>
+        s"era_${t.name}" -> ((s: SparkSession, _: String) =>
+          t.project(blocks(s)).orderBy("slot"))
       }.toMap
 
     tables ++ Map(
@@ -84,9 +85,6 @@ object EraQueries {
             max(when(col("record_type") === "block", col("slot"))).as("max_slot"))
           .orderBy(col("record_type"))
       }),
-      // wide single-file all-blocks shape (export/base.py:59-153)
-      "era_wide_blocks" -> ((s, _) =>
-        Normalizer.wideBlocks(blocks(s)).orderBy("slot")),
       // F20/F21/F22 on the NON-DEFAULT network: decoded fork / era / epoch /
       // timestamp for the mainnet fixtures. The oracle recomputes fork from
       // the mainnet epoch ladder and the timestamp from payload-time-else-

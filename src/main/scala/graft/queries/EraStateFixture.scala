@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.export.EraStateManager
+import graft.operators.Normalizer
 
 /**
  * Deterministic fixture state history for the era-state SQL surface
@@ -65,7 +66,7 @@ object EraStateFixture {
         // terminal (latest-state) failure: the "needing attention" row
         mgr.recordEraFailure(era, Network, "incomplete era: awaiting next file")
       else
-        mgr.recordEraCompletion(era, Network, mgr.allDatasets, n)
+        mgr.recordEraCompletion(era, Network, Normalizer.datasetNames, n)
     }
     mgr
   }

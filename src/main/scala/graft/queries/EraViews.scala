@@ -12,9 +12,9 @@ import graft.operators.Normalizer
  * (docs/CLICKHOUSE.md:340-920), so an engine swap has to let that SQL run
  * (near-)verbatim, not only through a Scala query map.
  *
- * [[register]] exposes every normalized child table
- * ([[Normalizer.datasetNames]]: blocks, attestations, transactions, …)
- * plus the wide single-file shape as TEMP VIEWS, after which
+ * [[register]] exposes the 16 tables of [[Normalizer.warehouseTables]] (the
+ * normalized tables blocks, attestations, transactions, … plus the wide
+ * single-file shape `wide_blocks`) as TEMP VIEWS, after which
  * `spark.sql("SELECT … FROM attestations …")` works directly. Views are
  * lazy plans over the one shared decode — registering costs nothing until
  * a query runs, and every SQL query hits the same cached decode the
@@ -30,9 +30,6 @@ import graft.operators.Normalizer
  */
 object EraViews {
 
-  /** View name for the wide single-file export shape. */
-  val WideBlocksView = "wide_blocks"
-
   /** Register all era tables as temp views over an arbitrary decoded-block
     * dataset — the production entry (point it at any era directory's
     * decode). */
@@ -42,10 +39,7 @@ object EraViews {
     // the caller's spark.sql would fail with TABLE_OR_VIEW_NOT_FOUND
     require(blocks.sparkSession eq spark,
       "register: blocks belongs to a different SparkSession than the one passed")
-    Normalizer.datasetNames.foreach { name =>
-      Normalizer.dataset(blocks, name).createOrReplaceTempView(name)
-    }
-    Normalizer.wideBlocks(blocks).createOrReplaceTempView(WideBlocksView)
+    Normalizer.warehouseTables.foreach(t => t.project(blocks).createOrReplaceTempView(t.name))
   }
 
   /** Fixture-backed registration (the harness/test entry): views over the
@@ -111,19 +105,13 @@ object EraViews {
       // a table that was legitimately EMPTY at export time — partitionBy
       // of zero rows emits only _SUCCESS, no part files — even though the
       // canonical schema is known right here
-      val dataFields = canonical.fields.toSeq.filterNot(_.name == "era_number")
-      val readSchema = org.apache.spark.sql.types.StructType(
-        dataFields :+ org.apache.spark.sql.types.StructField(
-          "era_number", org.apache.spark.sql.types.LongType))
-      val ordered = dataFields.map(f => col(f.name).as(f.name)) :+
+      val readSchema = canonical.add("era_number", org.apache.spark.sql.types.LongType)
+      val ordered = canonical.fieldNames.toSeq.map(n => col(n).as(n)) :+
         col("era_number").cast("long").as("era_number")
       spark.read.schema(readSchema).parquet(path)
         .select(ordered: _*).createOrReplaceTempView(name)
     }
-    Normalizer.datasetNames.foreach { name =>
-      bind(name, Normalizer.dataset(empty, name).schema)
-    }
-    bind(WideBlocksView, Normalizer.wideBlocksWithEra(empty).schema)
+    Normalizer.warehouseTables.foreach(t => bind(t.name, t.project(empty).schema))
   }
 
   private def sql(s: SparkSession, text: String): DataFrame = {

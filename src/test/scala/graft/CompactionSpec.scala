@@ -19,6 +19,13 @@ class CompactionSpec extends AnyFunSuite {
   private def fs(p: String) = new Path(p)
     .getFileSystem(spark.sparkContext.hadoopConfiguration)
 
+  test("every warehouse table has OPTIMIZE sort keys") {
+    // a table missing from the map would silently fall back to plain
+    // compaction in optimizeWarehouse
+    assert(Compaction.DefaultWarehouseSortKeys.keySet ===
+      graft.export.StagedExport.warehouseTableNames.toSet)
+  }
+
   private def mkTable(): String = {
     val dir = java.nio.file.Files.createTempDirectory("compact").toString + "/t"
     spark.range(4000)

@@ -30,7 +30,7 @@ class EraViewsSpec extends AnyFunSuite {
 
   test("every era view registers and is queryable by name") {
     EraViews.register(spark)
-    val expected = graft.operators.Normalizer.datasetNames :+ EraViews.WideBlocksView
+    val expected = graft.operators.Normalizer.warehouseTables.map(_.name)
     expected.foreach { name =>
       assert(spark.catalog.tableExists(name), s"view $name missing")
       assert(spark.sql(s"SELECT * FROM $name").schema.nonEmpty)

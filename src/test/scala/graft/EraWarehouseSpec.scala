@@ -62,7 +62,7 @@ class EraWarehouseSpec extends AnyFunSuite {
   test("warehouse views = canonical decode schema + era_number, wide shape included") {
     EraViews.register(spark)
     val decodeSchemas =
-      (graft.operators.Normalizer.datasetNames :+ EraViews.WideBlocksView)
+      graft.operators.Normalizer.warehouseTables.map(_.name)
         .map(n => n -> spark.table(n).schema.map(f => (f.name, f.dataType))).toMap
     val decodeCols = decodeSchemas.view.mapValues(_.map(_._1)).toMap
     EraViews.registerWarehouse(spark, warehouseDir)
@@ -76,13 +76,13 @@ class EraWarehouseSpec extends AnyFunSuite {
     // (JSON-embedded children survive the parquet round trip
     // byte-for-byte), and the ARITHMETIC era the warehouse writer derives
     // equals the decode's filename-metadata era on every block
-    val wideCols = decodeCols(EraViews.WideBlocksView).map(col)
-    val atRestWide = spark.table(EraViews.WideBlocksView)
+    val wideCols = decodeCols("wide_blocks").map(col)
+    val atRestWide = spark.table("wide_blocks")
       .select(wideCols: _*).orderBy(col("slot")).collect().toSeq.map(_.toSeq)
     val atRestEras = spark.table("blocks").select(col("slot"), col("era_number"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     EraViews.register(spark)
-    val decodedWide = spark.table(EraViews.WideBlocksView)
+    val decodedWide = spark.table("wide_blocks")
       .orderBy(col("slot")).collect().toSeq.map(_.toSeq)
     assert(atRestWide === decodedWide)
     val decodedEras = EraQueries.blocks(spark).toDF()

@@ -103,8 +103,7 @@ class ExportStateSpec extends AnyFunSuite with OnEveryRoot {
       val base = s"$dir/$ext/out.$ext"
       var counts = Map.empty[String, Long]
       val jobs = JobLog.during(spark) {
-        counts = Sinks.exportSeparateFiles(Map("t1" -> ds1, "t2" -> ds2), base,
-          metadata = Map("era" -> "42", "network" -> "gnosis"))
+        counts = Sinks.exportSeparateFiles(Map("t1" -> ds1, "t2" -> ds2), base)
           .map { case (t, (rows, _)) => t -> rows }
       }
       assert(counts === Map("t1" -> 2L, "t2" -> 1L))
@@ -120,10 +119,6 @@ class ExportStateSpec extends AnyFunSuite with OnEveryRoot {
         case _ => spark.read.parquet(s"$dir/$ext/out_t1.parquet")
       }
       assert(back.count() === 2)
-      // KV metadata sidecar (S14)
-      val meta = new String(
-        Files.readAllBytes(Paths.get(s"$local/$ext/out_t1.$ext/_era_metadata.json")), "UTF-8")
-      assert(meta.contains("\"era\": \"42\"") && meta.contains("\"rows\": \"2\""))
     }
   }
 
@@ -131,29 +126,25 @@ class ExportStateSpec extends AnyFunSuite with OnEveryRoot {
       (dir, local) =>
     import spark.implicits._
     val df = Seq((1L, "a"), (2L, "b")).toDF("slot", "v")
-    val info = Map("era_number" -> "42", "network" -> "gnosis",
-      "start_slot" -> "344064", "end_slot" -> "352255")
 
-    val nCsv = Sinks.writeWithEnvelope(df, s"$dir/out.csv", "blocks", info)
+    val nCsv = Sinks.writeWithEnvelope(df, s"$dir/out.csv", "blocks")
     assert(nCsv === 2)
     val csv = new String(Files.readAllBytes(Paths.get(s"$local/out.csv")), "UTF-8")
     val csvLines = csv.split("\n")
-    assert(csvLines(0) === "# Era 42: blocks data")
-    assert(csvLines(1) === "# Slots: 344064 - 352255")
-    assert(csvLines(2) === "# Network: gnosis")
-    assert(csvLines(3).startsWith("# Export timestamp: "))
-    assert(csvLines(4) === "# Total records: 2")
-    assert(csvLines(5) === "slot,v") // header, then data
-    assert(csvLines.length === 8)
+    assert(csvLines(0) === "# Era ?: blocks data")
+    assert(csvLines(1) === "# Network: ?")
+    assert(csvLines(2).startsWith("# Export timestamp: "))
+    assert(csvLines(3) === "# Total records: 2")
+    assert(csvLines(4) === "slot,v") // header, then data
+    assert(csvLines.length === 7)
 
-    val nJson = Sinks.writeWithEnvelope(df, s"$dir/out.jsonl", "blocks", info)
+    val nJson = Sinks.writeWithEnvelope(df, s"$dir/out.jsonl", "blocks")
     assert(nJson === 2)
     val jsonLines = new String(Files.readAllBytes(Paths.get(s"$local/out.jsonl")), "UTF-8")
       .split("\n")
     assert(jsonLines.length === 3)
     assert(jsonLines(0).contains("\"type\": \"metadata\""))
     assert(jsonLines(0).contains("\"record_count\": 2"))
-    assert(jsonLines(0).contains("\"era_number\": \"42\""))
     assert(jsonLines(1).contains("\"slot\"")) // data rows follow
     assert(!Files.exists(Paths.get(s"$local/out.csv.__parts")), "temp part dir left behind")
   }
@@ -307,7 +298,7 @@ class ExportStateSpec extends AnyFunSuite with OnEveryRoot {
     import spark.implicits._
     val logDir = s"$dir/era_completion"
     // a legacy log file written before writer_id existed: same columns
-    // minus writer_id (mergeSchema will surface the column as NULL here)
+    // minus writer_id (the log's explicit schema reads the column as NULL)
     val legacy = Seq(("gnosis", 1L, "completed", 8192L, 16383L, 10L,
         Seq("blocks"), "", 0L, 1L))
       .toDF("network", "era_number", "status", "slot_start", "slot_end",
@@ -401,10 +392,12 @@ class ExportStateSpec extends AnyFunSuite with OnEveryRoot {
     import spark.implicits._
     val (dataRoot, dataDir) = (s"$root/data", s"$local/data")
     val state = new EraStateManager(spark, s"$root/state")
-    // era-partitioned dataset layout
-    Seq((1L, 5L)).toDF("slot", "era_number").write
-      .partitionBy("era_number").parquet(s"$dataRoot/blocks")
-    assert(Files.exists(Paths.get(s"$dataDir/blocks/era_number=5")))
+    // era-partitioned warehouse layout, wide_blocks included
+    Seq("blocks", "wide_blocks").foreach { t =>
+      Seq((1L, 5L)).toDF("slot", "era_number").write
+        .partitionBy("era_number").parquet(s"$dataRoot/$t")
+      assert(Files.exists(Paths.get(s"$dataDir/$t/era_number=5")))
+    }
     state.recordEraCompletion(5, "gnosis", Seq("blocks"), 1)
     state.recordEraCompletion(6, "gnosis", Seq("blocks"), 1)
 
@@ -416,6 +409,7 @@ class ExportStateSpec extends AnyFunSuite with OnEveryRoot {
 
     state.cleanEraCompletely(dataRoot, "gnosis", 5)
     assert(!Files.exists(Paths.get(s"$dataDir/blocks/era_number=5")))
+    assert(!Files.exists(Paths.get(s"$dataDir/wide_blocks/era_number=5")))
     assert(!Files.exists(Paths.get(s"$dataDir/all_era_00005_blocks.parquet")))
     assert(Files.exists(Paths.get(s"$dataDir/all_era_00006_blocks.parquet"))) // other eras untouched
     assert(state.determineErasToProcess(Seq(5L, 6L), "gnosis") === Seq(5L))
