@@ -121,8 +121,8 @@ object Bench {
     s"""{"copies":$copies,${entries.mkString(",")}}"""
   }
 
-  /** Shared temp-dir cleanup (also used by tools and the fixture-warehouse
-    * shutdown hook — one hardening site, not three copies). */
+  /** Shared temp-dir cleanup (also used by the bench probes and the
+    * fixture-warehouse shutdown hook — one hardening site, not three copies). */
   private[graft] def deleteRecursively(path: String): Unit = {
     import java.nio.file.{Files, Paths}
     import java.util.Comparator
@@ -421,7 +421,7 @@ object Bench {
     // the graph family's shared edge-frame build, timed as its OWN key
     // BEFORE the sweep — previously this cost landed on whichever graph
     // query the sweep ran first, which made cc read 3× slow for two
-    // rounds (VERDICT r13 #5; tools/CcColdProbe decomposition)
+    // rounds (VERDICT r13 #5; the cold-bill decomposition in BENCH_NOTES.md)
     var graphEdgeCount = 0L
     val graphEdgeBuildSec = timed(1) {
       graphEdgeCount = graft.queries.Behavioral.prewarmGraphFrames(spark, sfDir)
@@ -538,7 +538,7 @@ object Bench {
     // groupBy(k).agg(sum(x)) under count() plans as a distinct-key count
     // and the sums never execute (measured on this corpus: agg_percentile
     // 3.2×, evt_markov_chain 1.6×, agg_pricing 1.5× count→noop;
-    // tools/NoopProbe). The noop sink computes every column of every row,
+    // BENCH_NOTES.md). The noop sink computes every column of every row,
     // so these per-query seconds are the honest expression-inclusive
     // numbers. ADDITIVE, not a replacement: the count-based `queries`/
     // `value` keys keep their 16-round methodology and comparability; the

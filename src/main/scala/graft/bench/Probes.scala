@@ -88,7 +88,7 @@ object Probes {
     * calibration (st_sec × the iteration ratio × factor 2, floored at
     * 0.2 s): a probe that takes 2× the run's own single-thread baseline
     * names steal/pressure, not noise. Double.MaxValue until the bench
-    * main calibrates, so tools/tests that call the rep helpers directly
+    * main calibrates, so tests that call the rep helpers directly
     * never label on an unset threshold. */
   @volatile var CpuProbeStallSec: Double = Double.MaxValue
 
@@ -107,7 +107,7 @@ object Probes {
     * labels the rep as ENVIRONMENT inside the artifact itself, so a slow
     * reading adjudicates without an out-of-band run (VERDICT r13 #1/#3).
     * [[WriteProbeStallMbps]] is the label threshold, calibrated idle vs
-    * under induced write load by tools/WriteStallProbe. */
+    * under induced write load (BENCH_NOTES.md). */
   def writeProbeMbps(spark: SparkSession): Double = {
     val dir = java.nio.file.Files.createTempDirectory("graft-wprobe").toString
     val t0 = System.nanoTime()
@@ -144,9 +144,9 @@ object Probes {
     * (min(pre, post) < threshold — the sensitive direction: a stall
     * window long enough to slow the rep usually reaches at least one
     * adjacent probe, and a false "stalled" only demotes the rep from the
-    * headline, never hides it). Calibration (tools/WriteStallProbe on
-    * this box): idle probes measure well above it; under an induced
-    * dirty-page flood they collapse under it. */
+    * headline, never hides it). Calibration (BENCH_NOTES.md): idle probes
+    * measure well above it; under an induced dirty-page flood they
+    * collapse under it. */
   val WriteProbeStallMbps = 8.0
 
   /** Read /proc/stat's aggregate steal ticks — the KERNEL's own count of

@@ -124,7 +124,7 @@ object Ramp {
     // not). Gate: ≤ ~1 per step for every family — EXCEPT the ANN rungs
     // where k = centroidCount ∝ N makes the exact IVF index BUILD
     // inherently superlinear (O(N·k) flat / O(N·√k) two-level, measured
-    // against theory in tools/CrossoverProbe; see BENCH_NOTES): those
+    // against theory in BENCH_NOTES): those
     // rungs re-build the index per measurement by design, and the
     // production shape amortizes the build (at-rest assignment artifact,
     // delta-only streaming ingest).

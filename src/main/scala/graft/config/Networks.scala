@@ -75,10 +75,4 @@ object EraSlots {
   def firstSlot(era: Long, cfg: NetworkConfig): Long = era * cfg.slotsPerHistoricalRoot
   def lastSlot(era: Long, cfg: NetworkConfig): Long =
     firstSlot(era, cfg) + cfg.slotsPerHistoricalRoot - 1
-  def erasForSlotRange(startSlot: Long, endSlot: Long, cfg: NetworkConfig): Seq[Long] =
-    (eraOfSlot(startSlot, cfg) to eraOfSlot(endSlot, cfg))
-
-  /** Wall-clock of a slot from genesis (block_parser.py:108-113 fallback). */
-  def slotTimestamp(slot: Long, cfg: NetworkConfig): Long =
-    cfg.genesisTime + slot * cfg.secondsPerSlot
 }

@@ -122,7 +122,22 @@ object Compaction {
     * commit between verify and swap); production callers leave it. */
   def compactEraTable(spark: SparkSession, tablePath: String,
       targetBytes: Long = 128L << 20,
-      beforeSwap: Path => Unit = _ => ()): Seq[LeafReport] = {
+      beforeSwap: Path => Unit = _ => ()): Seq[LeafReport] =
+    rewriteTable(spark, tablePath, targetBytes, beforeSwap, skipCompact = true) {
+      (live, stagedPath, nOut) =>
+        live.coalesce(nOut).write.mode("overwrite").parquet(stagedPath)
+    }
+
+  /** The per-table walk every pass shares: find the table, [[recover]] any
+    * torn swap, then plan each `era_number=N` leaf at
+    * `ceil(bytes / targetBytes)` output files and rewrite it through
+    * [[rewriteLeaf]] with `writeStaged(live, stagedPath, nOut)`, sweeping
+    * the work dirs however the walk ends. `skipCompact` leaves a leaf
+    * already at or under its planned file count untouched (compaction's
+    * skip; a clustering pass rewrites every leaf). */
+  private def rewriteTable(spark: SparkSession, tablePath: String,
+      targetBytes: Long, beforeSwap: Path => Unit, skipCompact: Boolean)(
+      writeStaged: (org.apache.spark.sql.DataFrame, String, Int) => Unit): Seq[LeafReport] = {
     require(targetBytes > 0, "targetBytes must be positive")
     val table = new Path(tablePath)
     val fs = table.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -135,11 +150,10 @@ object Compaction {
       val files = dataFiles(fs, leaf)
       val bytes = files.map(_.getLen).sum
       val nOut = math.max(1L, math.ceil(bytes.toDouble / targetBytes).toLong).toInt
-      if (files.size <= nOut)
+      if (skipCompact && files.size <= nOut)
         LeafReport(leaf.getName, files.size, files.size, bytes, -1L)
       else rewriteLeaf(spark, fs, table, leaf, files, bytes, beforeSwap) {
-        (live, stagedPath) =>
-          live.coalesce(nOut).write.mode("overwrite").parquet(stagedPath)
+        (live, stagedPath) => writeStaged(live, stagedPath, nOut)
       }
     }
     finally sweepWorkDirs(fs, table)
@@ -216,27 +230,12 @@ object Compaction {
   def optimizeEraTable(spark: SparkSession, tablePath: String,
       zorderBy: (String, String), targetBytes: Long = 128L << 20,
       writerOptions: Map[String, String] = Map.empty,
-      beforeSwap: Path => Unit = _ => ()): Seq[LeafReport] = {
-    require(targetBytes > 0, "targetBytes must be positive")
-    val table = new Path(tablePath)
-    val fs = table.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(table), s"no table at $tablePath")
-    recover(fs, table)
-    val parts = fs.listStatus(table).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("era_number="))
-      .map(_.getPath).sortBy(_.getName)
-    try parts.map { leaf =>
-      val files = dataFiles(fs, leaf)
-      val bytes = files.map(_.getLen).sum
-      val nOut = math.max(1L, math.ceil(bytes.toDouble / targetBytes).toLong).toInt
-      rewriteLeaf(spark, fs, table, leaf, files, bytes, beforeSwap) {
-        (live, stagedPath) =>
-          graft.operators.Layout.zorderWrite(live, zorderBy._1, zorderBy._2,
-            stagedPath, files = nOut, writerOptions = writerOptions)
-      }
+      beforeSwap: Path => Unit = _ => ()): Seq[LeafReport] =
+    rewriteTable(spark, tablePath, targetBytes, beforeSwap, skipCompact = false) {
+      (live, stagedPath, nOut) =>
+        graft.operators.Layout.zorderWrite(live, zorderBy._1, zorderBy._2,
+          stagedPath, files = nOut, writerOptions = writerOptions)
     }
-    finally sweepWorkDirs(fs, table)
-  }
 
   /** Linear-sort OPTIMIZE for a table whose sort key is ONE column (the
     * DDL's `ORDER BY (slot)` tables): same staged-swap skeleton, each
@@ -244,30 +243,13 @@ object Compaction {
     * row-group min/max ranges are tight for that column. */
   def sortEraTable(spark: SparkSession, tablePath: String, sortBy: String,
       targetBytes: Long = 128L << 20,
-      writerOptions: Map[String, String] = Map.empty,
-      beforeSwap: Path => Unit = _ => ()): Seq[LeafReport] = {
-    require(targetBytes > 0, "targetBytes must be positive")
-    val table = new Path(tablePath)
-    val fs = table.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(table), s"no table at $tablePath")
-    recover(fs, table)
-    val parts = fs.listStatus(table).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("era_number="))
-      .map(_.getPath).sortBy(_.getName)
-    try parts.map { leaf =>
-      val files = dataFiles(fs, leaf)
-      val bytes = files.map(_.getLen).sum
-      val nOut = math.max(1L, math.ceil(bytes.toDouble / targetBytes).toLong).toInt
-      rewriteLeaf(spark, fs, table, leaf, files, bytes, beforeSwap) {
-        (live, stagedPath) =>
-          live.repartitionByRange(nOut,
-              org.apache.spark.sql.functions.col(sortBy))
-            .sortWithinPartitions(sortBy)
-            .write.options(writerOptions).mode("overwrite").parquet(stagedPath)
-      }
+      beforeSwap: Path => Unit = _ => ()): Seq[LeafReport] =
+    rewriteTable(spark, tablePath, targetBytes, beforeSwap, skipCompact = false) {
+      (live, stagedPath, nOut) =>
+        live.repartitionByRange(nOut, org.apache.spark.sql.functions.col(sortBy))
+          .sortWithinPartitions(sortBy)
+          .write.mode("overwrite").parquet(stagedPath)
     }
-    finally sweepWorkDirs(fs, table)
-  }
 
   /** Per-table OPTIMIZE sort keys for the standard warehouse — the first
     * two columns of each table's `ORDER BY` in the reference's ClickHouse
@@ -296,19 +278,16 @@ object Compaction {
     * (`era_state_manager.optimize_tables`, era_state_manager.py:329-346)
     * for one network's warehouse subtree: every table rewritten through
     * the crash-safe staged swap, clustered by its DDL-derived sort keys
-    * (Z-order when two, linear when one; a table absent from `keys` is
-    * plain-compacted). CLI: `graft --optimize-warehouse <dir> <network>`. */
+    * (Z-order when two, linear when one; a table absent from
+    * [[DefaultWarehouseSortKeys]] is plain-compacted).
+    * CLI: `graft --optimize-warehouse <dir> <network>`. */
   def optimizeWarehouse(spark: SparkSession, warehouseDir: String,
-      network: String, targetBytes: Long = 128L << 20,
-      keys: Map[String, Seq[String]] = DefaultWarehouseSortKeys,
-      writerOptions: Map[String, String] = Map.empty): Map[String, Seq[LeafReport]] =
+      network: String, targetBytes: Long = 128L << 20): Map[String, Seq[LeafReport]] =
     StagedExport.warehouseTableNames.map { t =>
       val table = s"$warehouseDir/$network/$t"
-      t -> (keys.get(t) match {
-        case Some(Seq(x, y)) =>
-          optimizeEraTable(spark, table, (x, y), targetBytes, writerOptions)
-        case Some(Seq(x)) =>
-          sortEraTable(spark, table, x, targetBytes, writerOptions)
+      t -> (DefaultWarehouseSortKeys.get(t) match {
+        case Some(Seq(x, y)) => optimizeEraTable(spark, table, (x, y), targetBytes)
+        case Some(Seq(x)) => sortEraTable(spark, table, x, targetBytes)
         case _ => compactEraTable(spark, table, targetBytes)
       })
     }.toMap

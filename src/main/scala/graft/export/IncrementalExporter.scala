@@ -182,9 +182,11 @@ object IncrementalExporter {
             if (fs.exists(hp(part))) spark.read.parquet(part).count() else 0L
           }
       })
-      val counts = tables.map(_._1).zip(written)
+      val byTable = tables.map(_._1).zip(written)
+      val counts = byTable
         .filter { case (name, _) => Normalizer.datasetNames.contains(name) }.toMap
-      rowBytes ++= counts.flatMap { case (name, rows) =>
+      // every written table, wide_blocks included, measures its own width
+      rowBytes ++= byTable.flatMap { case (name, rows) =>
         if (rows <= 0) None
         else {
           val p = hp(s"$netDir/$name/era_number=$era")

@@ -276,8 +276,8 @@ object Sinks {
       url: String,
       table: String,
       properties: Map[String, String] = Map.empty,
-      batchSize: Int = 100000,
-      maxRetries: Int = 3): Unit = {
+      batchSize: Int = 100000): Unit = {
+    val maxRetries = 3
     val props = new java.util.Properties()
     properties.foreach { case (k, v) => props.setProperty(k, v) }
     props.setProperty("batchsize", batchSize.toString)

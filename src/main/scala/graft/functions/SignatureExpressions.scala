@@ -148,17 +148,6 @@ object Signatures {
     c
   }
 
-  def sortedOverlapSeq(a: Seq[Long], b: Seq[Long]): Long = {
-    var i = 0; var j = 0; var c = 0L
-    while (i < a.length && j < b.length) {
-      val x = a(i); val y = b(j)
-      if (x == y) { c += 1; i += 1; j += 1 }
-      else if (x < y) i += 1
-      else j += 1
-    }
-    c
-  }
-
   /** Same char class as java.util.regex \s — the tokenizer the SQL
     * formulation (`split(text, '\\s+')`) uses. */
   private def isWs(c: Char): Boolean =
@@ -250,11 +239,6 @@ object Signatures {
       j += 1
     }
     new GenericArrayData(out)
-  }
-
-  def wordNgramsSeq(s: String, n: Int): Seq[String] = {
-    val a = wordNgrams(UTF8String.fromString(s), n)
-    (0 until a.numElements()).map(i => a.getUTF8String(i).toString)
   }
 
   /** DISTINCT sliding-window minima (winnowing selection): for each of the

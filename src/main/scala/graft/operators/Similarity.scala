@@ -302,8 +302,8 @@ object Similarity {
   /** Largest centroid set the FLAT broadcast-join argmax
     * ([[bestCentroid]]'s non-literal plan) is allowed to carry — now a
     * BOUND on the flat kernel's auxiliary uses (the [[recallReport]]
-    * literal-regime harness, spec cross-checks, the r11
-    * [[graft.tools.CrossoverProbe]] brackets), NOT the assignment
+    * literal-regime harness, spec cross-checks, the r11 crossover
+    * brackets recorded in BENCH_NOTES.md), NOT the assignment
     * dispatch threshold. r16: the occupancy-pinned k ∝ N (k ≈ N/256)
     * makes ANY flat plan O(N·k) = O(N²/256) — the r15 deep ramp convicted
     * the flat path at the 512× rung (`sim_hard_negatives` 98.5 s floor =

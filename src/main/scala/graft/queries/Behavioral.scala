@@ -114,8 +114,8 @@ object Behavioral {
     * self-join + distinct + degree join at every use (the GraphX
     * discipline: persist the edge frame before iterating; without it the
     * final adaptive plan re-executes the derivation per use — 14–36
-    * lineitem scans per query with zero exchange reuse, measured via
-    * [[graft.tools.ReuseProbe]]). Degree rides along because every
+    * lineitem scans per query with zero exchange reuse, measured in
+    * SCALING.md). Degree rides along because every
     * consumer needs it (PageRank's contribution split, the orientation
     * rank, the degree histogram), which keeps each iteration a single
     * cache-read + one rank shuffle. At 100 TB this frame is the bucketed
@@ -137,7 +137,7 @@ object Behavioral {
     * shared bill as its OWN artifact key (`graph_edge_build_sec`) instead
     * of booking it against whichever graph query happens to run first —
     * the accounting slip that made cc look 3× slow for two rounds
-    * (tools/CcColdProbe decomposition; VERDICT r13 #5). Returns the
+    * (the cold-bill decomposition in BENCH_NOTES.md; VERDICT r13 #5). Returns the
     * directed edge count. */
   def prewarmGraphFrames(s: SparkSession, dir: String): Long =
     coPurchaseEdges(s, dir).count()

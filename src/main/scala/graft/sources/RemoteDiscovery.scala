@@ -8,7 +8,6 @@ import java.time.Duration
 
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.{Duration => SDuration}
-import scala.util.matching.Regex
 
 /**
  * Remote era-store connector (SURVEY.md §2.1 S6–S9, §3.2): discovery of era
@@ -34,10 +33,6 @@ object RemoteDiscovery {
       (a.toInt, Some(b.toInt))
     case s => (s.toInt, Some(s.toInt))
   }
-
-  /** `<network>-<era 05d>-<hash8>.era` (remote_downloader.py:110,253). */
-  def eraFilePattern(network: String): Regex =
-    raw"""($network-(\d{5})-[a-f0-9]{8}\.era)""".r
 
   private def inRange(era: Int, start: Int, end: Option[Int]): Boolean =
     era >= start && end.forall(era <= _)
@@ -150,10 +145,11 @@ object RemoteDiscovery {
     lo
   }
 
-  /** S9: streaming download with local cache reuse, ×`maxRetries` retry and
+  /** S9: streaming download with local cache reuse, ×3 retry and
     * exponential backoff (remote_downloader.py:439-497). */
-  def download(url: String, destDir: String, client: HttpClient = newClient(),
-      maxRetries: Int = 3): Path = {
+  def download(url: String, destDir: String): Path = {
+    val client = newClient()
+    val maxRetries = 3
     val name = url.substring(url.lastIndexOf('/') + 1)
     Files.createDirectories(Paths.get(destDir))
     val dest = Paths.get(destDir, name)

@@ -46,8 +46,11 @@ object Ssz {
     IntLE.get(data, offset).asInstanceOf[Int] & 0xffffffffL
   }
 
-  /** [[readUint256Decimal]] with an explicit limit (range-parser twin). */
+  /** uint256 LE → exact decimal string (forks/base.py:435
+    * base_fee_per_gas); a read past `limit` (≤ data.length) yields "0". */
   def readUint256DecimalIn(data: Array[Byte], offset: Int, limit: Int, len: Int = 32): String = {
+    // Long arithmetic: a near-MaxValue offset would wrap `offset + len`
+    // negative and sneak past an Int bounds check
     if (offset < 0 || offset.toLong + len > limit) return "0"
     val be = new Array[Byte](len)
     var i = 0
@@ -65,17 +68,6 @@ object Ssz {
     * semantics for every branch the decoders take. */
   def readOffset(data: Array[Byte], at: Int): Int =
     math.min(readUint32(data, at), data.length.toLong).toInt
-
-  /** uint256 LE → exact decimal string (forks/base.py:435 base_fee_per_gas). */
-  def readUint256Decimal(data: Array[Byte], offset: Int, len: Int = 32): String = {
-    // Long arithmetic: a near-MaxValue offset would wrap `offset + len`
-    // negative and sneak past an Int bounds check into copyOfRange
-    if (offset < 0 || offset.toLong + len > data.length) return "0"
-    val be = new Array[Byte](len)
-    var i = 0
-    while (i < len) { be(i) = data(offset + len - 1 - i); i += 1 }
-    new java.math.BigInteger(1, be).toString
-  }
 
   def slice(data: Array[Byte], from: Int, until: Int): Array[Byte] = {
     val f = math.max(0, math.min(from, data.length))
@@ -111,15 +103,10 @@ object Ssz {
     new String(out, java.nio.charset.StandardCharsets.ISO_8859_1)
   }
 
-  /** Fixed-stride SSZ list: truncate trailing partial item, parse each
-    * (ssz_utils.py:30-51). `parse` returning null drops the item. */
-  def parseFixedList[T](data: Array[Byte], itemSize: Int, parse: Array[Byte] => T): Vector[T] =
-    parseFixedListAt(data, 0, data.length, itemSize,
-      (d, f, u) => parse(slice(d, f, u)))
-
-  /** Range-based [[parseFixedList]]: items are (from, until) windows into
-    * the section's backing array — no per-item copy. `parse` receives the
-    * exact bounds a copied slice would have had. */
+  /** Fixed-stride SSZ list over the (from, until) section of `data`:
+    * truncate the trailing partial item, parse each (ssz_utils.py:30-51).
+    * Items are (from, until) windows into the section's backing array — no
+    * per-item copy. `parse` returning null drops the item. */
   def parseFixedListAt[T](data: Array[Byte], from: Int, until: Int,
       itemSize: Int, parse: (Array[Byte], Int, Int) => T): Vector[T] = {
     val len = until - from
@@ -135,21 +122,16 @@ object Ssz {
     out.result()
   }
 
-  /** Variable-size SSZ list via 4-byte offset table, with the reference's
-    * tolerance rules (ssz_utils.py:53-121):
-    *  - len<4 or misaligned/short first offset → treat whole buffer as one item;
-    *  - first_offset==0 → single item over the whole buffer;
+  /** Variable-size SSZ list via 4-byte offset table over the (from, until)
+    * section of `data`, with the reference's tolerance rules
+    * (ssz_utils.py:53-121):
+    *  - len<4 or misaligned/short first offset → treat whole section as one item;
+    *  - first_offset==0 → single item over the whole section;
     *  - first_offset==len → empty list;
     *  - out-of-range offsets dropped; start>=end sections skipped.
-    */
-  def parseVariableList[T](data: Array[Byte], parse: Array[Byte] => T): Vector[T] =
-    parseVariableListAt(data, 0, data.length,
-      (d, f, u) => parse(slice(d, f, u)))
-
-  /** Range-based [[parseVariableList]]: the section is the (from, until)
-    * window of `data`, offsets are section-relative exactly as in the
-    * copied-slice form, and `parse` receives absolute item bounds — no
-    * per-item copy. Tolerance rules identical. */
+    *
+    * Offsets are section-relative, and `parse` receives absolute item
+    * bounds — no per-item copy. */
   def parseVariableListAt[T](data: Array[Byte], from: Int, until: Int,
       parse: (Array[Byte], Int, Int) => T): Vector[T] = {
     val len = until - from

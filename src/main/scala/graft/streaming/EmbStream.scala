@@ -85,15 +85,6 @@ object EmbStream {
       .withColumn("sq", graft.functions.VectorMath.normSq("vec"))
       .filter(col("sq") > 0)
 
-  /** The batch-side assignment [[ingestLargeK]] shares with an offline
-    * backfill: prep + scale-dispatched cell assignment from the centroid
-    * FRAME. Output: input columns + `cell`. */
-  def assignBatch(batch: DataFrame, centDf: DataFrame, k: Int): DataFrame = {
-    graft.GraftExtensions.ensureRegistered(batch.sparkSession)
-    graft.operators.Similarity.assignFromFrame(prepBatch(batch), centDf, k)
-      .drop("vec", "sq")
-  }
-
   /** Per-(window, cell) ingest accounting with an occupancy alarm: arriving
     * vectors are assigned via [[withCell]] and counted per tumbling window;
     * a cell ingesting more than `hotCellThreshold` vectors in one window is

@@ -112,12 +112,13 @@ class CompactionSpec extends AnyFunSuite {
     assert(!f.exists(staged), "incomplete staged copy survived recovery")
   }
 
-  test("compacting a real fixture warehouse is invisible to the SQL surface") {
+  /** Compacting a landed warehouse is invisible to the SQL surface and
+    * lowers its file count. `land` writes the warehouse at its argument;
+    * `split` are tables it leaves in several files per partition. */
+  private def compactLandedWarehouse(split: Seq[String])(land: String => Unit): Unit = {
     val root = java.nio.file.Files.createTempDirectory("compact-wh").toString
-    graft.queries.EraViews.landWarehouse(
-      spark.read.format("era").load(graft.testkit.EraFixtures.ensureGenerated()),
-      s"$root/wh")
     val wh = s"$root/wh"
+    land(wh)
     val net = fs(wh).listStatus(new Path(wh)).filter(_.isDirectory)
       .map(_.getPath.getName).filterNot(_.startsWith("_")).head
     graft.queries.EraViews.registerWarehouse(spark, wh, net)
@@ -126,7 +127,7 @@ class CompactionSpec extends AnyFunSuite {
       spark.sql("SELECT COUNT(*) FROM attestations").first.getLong(0))
     val before = counts()
     assert(before._1 > 0 && before._2 > 0)
-    // the freshly-exported warehouse is already one file per partition —
+    // a freshly-exported warehouse may be one file per partition —
     // recreate the accretion a long-lived incremental loop produces by
     // splintering the blocks table's partitions into 5 files each
     val blocksDir = s"$wh/$net/blocks"
@@ -142,6 +143,7 @@ class CompactionSpec extends AnyFunSuite {
       }
     graft.queries.EraViews.registerWarehouse(spark, wh, net)
     assert(counts() === before, "splintering changed row counts")
+    val rowsBefore = WarehouseRows(spark, s"$wh/$net")
     val reports = Compaction.compactWarehouse(spark, wh, net, 1L << 30)
     assert(reports.keySet === graft.export.StagedExport.warehouseTableNames.toSet)
     val blocksReports = reports("blocks")
@@ -150,8 +152,27 @@ class CompactionSpec extends AnyFunSuite {
     assert(blocksReports.nonEmpty &&
       blocksReports.forall(r => r.filesBefore > 1 && r.filesAfter == 1),
       s"blocks partitions not collapsed: $blocksReports")
+    (split :+ "blocks").foreach { t =>
+      val rs = reports(t)
+      assert(rs.map(_.filesAfter).sum < rs.map(_.filesBefore).sum,
+        s"compaction did not lower the file count of $t: $rs")
+    }
     graft.queries.EraViews.registerWarehouse(spark, wh, net)
     assert(counts() === before, "compaction changed SQL-visible row counts")
+    val rowsAfter = WarehouseRows(spark, s"$wh/$net")
+    rowsBefore.foreach { case (t, rows) =>
+      assert(rowsAfter(t) === rows, s"compaction changed the rows of $t")
+    }
+  }
+
+  test("compacting a real fixture warehouse is invisible to the SQL surface") {
+    compactLandedWarehouse(Seq.empty)(wh => graft.queries.EraViews.landWarehouse(
+      spark.read.format("era").load(graft.testkit.EraFixtures.ensureGenerated()), wh))
+  }
+
+  test("compacting a warehouse landed in 4 KB files is invisible to the SQL surface [SyntheticEra]") {
+    compactLandedWarehouse(Seq("attestations", "sync_aggregates"))(
+      SyntheticEra.landSizedWarehouse(spark, _))
   }
 
   test("a part file committed mid-compaction trips the pre-swap fence: swap aborted, rows kept") {

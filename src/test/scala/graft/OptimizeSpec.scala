@@ -109,19 +109,21 @@ class OptimizeSpec extends AnyFunSuite {
     assert(rowsOf(dir) === before, "recovery + optimize lost or changed rows")
   }
 
-  test("optimize-warehouse rewrites every table by its DDL-derived keys, SQL-invisible") {
+  /** Optimizing a landed warehouse rewrites every table by its
+    * DDL-derived keys and is invisible to the SQL surface. `land` writes
+    * the warehouse at its argument; `filled` are tables it must fill. */
+  private def optimizeLandedWarehouse(filled: Seq[String])(land: String => Unit): Unit = {
     val root = java.nio.file.Files.createTempDirectory("optimize-wh").toString
-    graft.queries.EraViews.landWarehouse(
-      spark.read.format("era").load(graft.testkit.EraFixtures.ensureGenerated()),
-      s"$root/wh")
     val wh = s"$root/wh"
+    land(wh)
     val net = fs(wh).listStatus(new Path(wh)).filter(_.isDirectory)
       .map(_.getPath.getName).filterNot(_.startsWith("_")).head
     graft.queries.EraViews.registerWarehouse(spark, wh, net)
-    def counts(): Seq[Long] = Seq("blocks", "attestations", "withdrawals")
+    def counts(): Seq[Long] = filled
       .map(t => spark.sql(s"SELECT COUNT(*) FROM $t").first.getLong(0))
     val before = counts()
     assert(before.forall(_ > 0))
+    val rowsBefore = WarehouseRows(spark, s"$wh/$net")
     val reports = Compaction.optimizeWarehouse(spark, wh, net)
     assert(reports.keySet === graft.export.StagedExport.warehouseTableNames.toSet)
     // every non-empty table rewrote all its partitions without aborts
@@ -131,6 +133,10 @@ class OptimizeSpec extends AnyFunSuite {
     assert(reports("blocks").nonEmpty && reports("sync_aggregates").nonEmpty)
     graft.queries.EraViews.registerWarehouse(spark, wh, net)
     assert(counts() === before, "optimize-warehouse changed SQL-visible counts")
+    val rowsAfter = WarehouseRows(spark, s"$wh/$net")
+    rowsBefore.foreach { case (t, rows) =>
+      assert(rowsAfter(t) === rows, s"optimize-warehouse changed the rows of $t")
+    }
     // spot-check the clustered layout actually landed sorted: within the
     // rewritten blocks partition files, slot is the leading sort key, so
     // a min/max per file from the footer is tight — proxy: reading one
@@ -140,6 +146,19 @@ class OptimizeSpec extends AnyFunSuite {
     val rows = spark.read.parquet(leaf.toString).select("slot").collect().map(_.getLong(0))
     assert(rows.nonEmpty)
     graft.Bench.deleteRecursively(root)
+  }
+
+  test("optimize-warehouse rewrites every table by its DDL-derived keys, SQL-invisible") {
+    optimizeLandedWarehouse(Seq("blocks", "attestations", "withdrawals"))(wh =>
+      graft.queries.EraViews.landWarehouse(
+        spark.read.format("era").load(graft.testkit.EraFixtures.ensureGenerated()), wh))
+  }
+
+  test("optimize-warehouse rewrites a warehouse landed in 4 KB files, SQL-invisible [SyntheticEra]") {
+    // blocks and attestations take the Z-order branch, sync_aggregates the
+    // linear sort
+    optimizeLandedWarehouse(Seq("blocks", "attestations", "sync_aggregates"))(
+      SyntheticEra.landSizedWarehouse(spark, _))
   }
 
   test("a concurrent commit during optimize trips the same fence as compaction") {

@@ -37,6 +37,25 @@ class SszPropertySpec extends AnyFunSuite {
     out.array()
   }
 
+  /** Each input runs bare (pad 0) and embedded at a non-zero `from` inside
+    * a buffer padded with 0xff on both sides, the way the decoder calls the
+    * range parsers on a section of a block body. */
+  private val pads = Seq(0, 5, 16)
+
+  private def padded(bytes: Array[Byte], pad: Int): Array[Byte] =
+    Array.fill[Byte](pad)(-1) ++ bytes ++ Array.fill[Byte](pad)(-1)
+
+  private def copyItem(d: Array[Byte], from: Int, until: Int): Array[Byte] =
+    java.util.Arrays.copyOfRange(d, from, until)
+
+  /** `parseVariableListAt` over `bytes` at every pad, items copied out. */
+  private def variableLists(bytes: Array[Byte]): Seq[Vector[Array[Byte]]] =
+    pads.map(p => Ssz.parseVariableListAt(padded(bytes, p), p, p + bytes.length, copyItem))
+
+  /** `parseFixedListAt` over `bytes` at every pad, items copied out. */
+  private def fixedLists(bytes: Array[Byte], stride: Int): Seq[Vector[Array[Byte]]] =
+    pads.map(p => Ssz.parseFixedListAt(padded(bytes, p), p, p + bytes.length, stride, copyItem))
+
   private val genItem: Gen[Array[Byte]] =
     Gen.chooseNum(1, 40).flatMap(n => Gen.listOfN(n, Gen.chooseNum(-128, 127).map(_.toByte)))
       .map(_.toArray)
@@ -46,19 +65,20 @@ class SszPropertySpec extends AnyFunSuite {
       locally {
         val items = items0
         val encoded = encodeVariableList(items)
-        val decoded = Ssz.parseVariableList(encoded, identity[Array[Byte]])
-        assert(decoded.length === items.length)
-        decoded.zip(items).foreach { case (d, o) => assert(d.sameElements(o)) }
+        variableLists(encoded).foreach { decoded =>
+          assert(decoded.length === items.length)
+          decoded.zip(items).foreach { case (d, o) => assert(d.sameElements(o)) }
+        }
       }
     }
   }
 
   test("empty variable list encodes as empty-buffer or offset==len and decodes empty") {
-    assert(Ssz.parseVariableList(Array.empty[Byte], identity[Array[Byte]]).isEmpty)
+    variableLists(Array.empty[Byte]).foreach(d => assert(d.isEmpty))
     // a single 4-byte offset table pointing at end-of-buffer = empty list
     val selfOffset = java.nio.ByteBuffer.allocate(4)
       .order(java.nio.ByteOrder.LITTLE_ENDIAN).putInt(4).array()
-    assert(Ssz.parseVariableList(selfOffset, identity[Array[Byte]]).isEmpty)
+    variableLists(selfOffset).foreach(d => assert(d.isEmpty))
   }
 
   test("offsets >= 2^31 keep the reference's unsigned semantics (no Int wrap)") {
@@ -68,17 +88,21 @@ class SszPropertySpec extends AnyFunSuite {
     // falls through to the too-many-offsets empty return (num_items*4 >
     // len); a signed wrap would take the single-item branch instead
     val hugeFirst = le32(0x80000000L) ++ Array.fill[Byte](12)(7)
-    assert(Ssz.parseVariableList(hugeFirst, identity[Array[Byte]]).isEmpty)
+    variableLists(hugeFirst).foreach(d => assert(d.isEmpty))
     // huge SECOND table entry: the reference drops it as out of range, so
     // item 0 runs to end-of-buffer; a negative wrap would pass the bounds
     // filter and corrupt item 0's end bound (start >= end -> dropped)
     val twoOffsets = le32(8) ++ le32(0xfffffff0L) ++ Array.fill[Byte](6)(9)
-    val items = Ssz.parseVariableList(twoOffsets, identity[Array[Byte]])
-    assert(items.length === 1 && items.head.sameElements(Array.fill[Byte](6)(9)))
+    variableLists(twoOffsets).foreach { items =>
+      assert(items.length === 1 && items.head.sameElements(Array.fill[Byte](6)(9)))
+    }
     // readOffset clamps to length, never negative
     assert(Ssz.readOffset(hugeFirst, 0) === hugeFirst.length)
     // uint256 at a near-MaxValue offset must not wrap past the bounds check
-    assert(Ssz.readUint256Decimal(Array.fill[Byte](40)(1), Int.MaxValue - 8) === "0")
+    pads.foreach { p =>
+      val ones = Array.fill[Byte](40)(1)
+      assert(Ssz.readUint256DecimalIn(padded(ones, p), Int.MaxValue - 8, p + ones.length) === "0")
+    }
     // (decoder item parsers under the same inputs: DecoderOffsetSpec)
   }
 
@@ -86,10 +110,11 @@ class SszPropertySpec extends AnyFunSuite {
     forAll(Gen.zip(Gen.chooseNum(1, 16),
         Gen.listOf(Gen.chooseNum(-128, 127).map(_.toByte)))) { case (stride, bytes0) =>
       val bytes = bytes0.toArray
-      val items = Ssz.parseFixedList(bytes, stride, identity[Array[Byte]])
-      assert(items.length === bytes.length / stride) // partial tail dropped
-      items.zipWithIndex.foreach { case (it, i) =>
-        assert(it.sameElements(bytes.slice(i * stride, (i + 1) * stride)))
+      fixedLists(bytes, stride).foreach { items =>
+        assert(items.length === bytes.length / stride) // partial tail dropped
+        items.zipWithIndex.foreach { case (it, i) =>
+          assert(it.sameElements(bytes.slice(i * stride, (i + 1) * stride)))
+        }
       }
     }
   }

@@ -1,9 +1,13 @@
 package graft
 
 import java.io.{BufferedOutputStream, File, FileOutputStream}
+import java.nio.file.Files
 
 import com.fasterxml.jackson.databind.ObjectMapper
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 
+import graft.export.{EraStateManager, IncrementalExporter}
 import graft.sources.EraFileWriter
 import graft.ssz.SnappyFramed
 import graft.testkit.SszEncoder
@@ -65,5 +69,27 @@ object SyntheticEra {
       Some((first + 8192L, Array[Byte](1, 2, 3, 4))), first, 8192)
     finally out.close()
     f
+  }
+
+  /** Eras 1 and 2 of 400 altair blocks each: enough rows that a 4 KB
+    * `runWarehouse` file target splits era 2's tables into several files. */
+  val SizedEras: Seq[Long] = Seq(1L, 2L)
+
+  /** Writes [[SizedEras]] once; returns the loader of one era's records. */
+  def sizedEraLoader(spark: SparkSession): Long => DataFrame = {
+    val src = Files.createTempDirectory("graft-synth-sized").toString
+    SizedEras.foreach(write(src, _, 400))
+    val records = spark.read.format("era").load(src)
+    era => records.filter(col("era_number") === era)
+  }
+
+  /** Lands [[SizedEras]] into `<wh>/gnosis` through `runWarehouse` with a
+    * 4 KB file target, on a state log of its own. */
+  def landSizedWarehouse(spark: SparkSession, wh: String): Unit = {
+    val state = new EraStateManager(spark,
+      Files.createTempDirectory("graft-synth-sized-state").toString)
+    val done = IncrementalExporter.runWarehouse(spark, state, "gnosis", SizedEras, wh,
+      targetFileBytes = 4096L)(sizedEraLoader(spark))
+    require(done == SizedEras, s"landed $done")
   }
 }

@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.export.{EraStateManager, IncrementalExporter}
@@ -15,7 +16,9 @@ import graft.testkit.EraFixtures
   * exercises the MATH with a deliberately tiny target: the first era
   * (nothing measured yet) writes unconstrained; every later era's hot
   * table must split into more, smaller files — and the warehouse contents
-  * must be byte-identical to an unconstrained run's. */
+  * must be byte-identical to an unconstrained run's. The loop runs on the
+  * reference fixture eras and on [[SyntheticEra]] eras, which need no
+  * fixture and whose `wide_blocks` is wide enough to split too. */
 class WhFileSizingSpec extends AnyFunSuite {
 
   private lazy val spark = TestSpark.spark
@@ -26,56 +29,64 @@ class WhFileSizingSpec extends AnyFunSuite {
     else d.listFiles().toSeq.filter(f => f.getName.endsWith(".parquet"))
   }
 
-  test("derived maxRecordsPerFile splits later eras' hot tables; contents unchanged") {
-    val eraDir = EraFixtures.ensureGenerated()
-    val files: Map[Long, String] = new java.io.File(eraDir).listFiles().toSeq
-      .filter(_.getName.endsWith(".era"))
-      .map(f => f.getName.split("-")(1).toLong -> f.getAbsolutePath).toMap
-    val eras = files.keys.toSeq.sorted
+  /** Lands `eras` of `network` twice — at the default target and at a
+    * ~4 KB one — and checks that the last era of every `hot` table splits
+    * into more, smaller files while both warehouses hold identical rows. */
+  private def checkSizing(network: String, eras: Seq[Long], hot: Seq[String])(
+      loadEra: Long => DataFrame): Unit = {
     assert(eras.size >= 2, "need at least two eras: the first only measures")
-    def loadEra(era: Long) = spark.read.format("era").load(files(era))
 
     // reference run: default (512 MB) target — local eras never hit it
     val whA = Files.createTempDirectory("graft-whsize-a").toString
     val stateA = new EraStateManager(spark,
       Files.createTempDirectory("graft-whsize-state-a").toString)
     assert(IncrementalExporter.runWarehouse(
-      spark, stateA, "gnosis", eras, whA)(loadEra) === eras)
+      spark, stateA, network, eras, whA)(loadEra) === eras)
 
-    // sized run: ~4 KB target → bytes/row measured on era 1 forces every
-    // later era's attestations (the hot table) into multiple small files
+    // sized run: ~4 KB target → bytes/row measured on the first era forces
+    // every later era's hot tables into multiple small files
     val whB = Files.createTempDirectory("graft-whsize-b").toString
     val stateB = new EraStateManager(spark,
       Files.createTempDirectory("graft-whsize-state-b").toString)
     assert(IncrementalExporter.runWarehouse(
-      spark, stateB, "gnosis", eras, whB,
+      spark, stateB, network, eras, whB,
       targetFileBytes = 4096L)(loadEra) === eras)
 
-    val hot = "attestations"
     val lastEra = eras.last
-    val a = partFiles(s"$whA/gnosis/$hot", lastEra)
-    val b = partFiles(s"$whB/gnosis/$hot", lastEra)
-    assert(a.nonEmpty && b.nonEmpty)
-    assert(b.size > a.size,
-      s"tiny target must split the hot table: ${a.size} files unconstrained, ${b.size} sized")
-    // the cap bounds file size near the target: every sized file stays
-    // within a small multiple of it (row-group framing adds per-file
-    // overhead, so the bound is loose but still catches a no-op cap)
-    val maxSized = b.map(_.length()).max
-    val maxFree = a.map(_.length()).max
-    assert(maxSized < maxFree,
-      s"sized files should be smaller than unconstrained ones: $maxSized vs $maxFree")
+    hot.foreach { t =>
+      val a = partFiles(s"$whA/$network/$t", lastEra)
+      val b = partFiles(s"$whB/$network/$t", lastEra)
+      assert(a.nonEmpty && b.nonEmpty, t)
+      assert(b.size > a.size,
+        s"tiny target must split $t: ${a.size} files unconstrained, ${b.size} sized")
+      // the cap bounds file size near the target: every sized file stays
+      // within a small multiple of it (row-group framing adds per-file
+      // overhead, so the bound is loose but still catches a no-op cap)
+      val maxSized = b.map(_.length()).max
+      val maxFree = a.map(_.length()).max
+      assert(maxSized < maxFree,
+        s"$t: sized files should be smaller than unconstrained ones: $maxSized vs $maxFree")
+    }
 
     // value gate: both warehouses hold identical rows, table for table
-    def rowsOf(path: String): Seq[String] = {
-      val d = new java.io.File(path)
-      if (!d.isDirectory || d.listFiles().isEmpty) Seq.empty
-      else spark.read.parquet(path).collect().toSeq
-        .map(_.toSeq.mkString("|")).sorted
-    }
+    val rowsA = WarehouseRows(spark, s"$whA/$network")
+    val rowsB = WarehouseRows(spark, s"$whB/$network")
     graft.export.StagedExport.warehouseTableNames.foreach { t =>
-      assert(rowsOf(s"$whA/gnosis/$t") === rowsOf(s"$whB/gnosis/$t"),
-        s"table $t diverged under file sizing")
+      assert(rowsA(t) === rowsB(t), s"table $t diverged under file sizing")
     }
+  }
+
+  test("derived maxRecordsPerFile splits later eras' hot tables; contents unchanged") {
+    val eraDir = EraFixtures.ensureGenerated()
+    val files: Map[Long, String] = new java.io.File(eraDir).listFiles().toSeq
+      .filter(_.getName.endsWith(".era"))
+      .map(f => f.getName.split("-")(1).toLong -> f.getAbsolutePath).toMap
+    checkSizing("gnosis", files.keys.toSeq.sorted, Seq("attestations"))(
+      era => spark.read.format("era").load(files(era)))
+  }
+
+  test("derived maxRecordsPerFile splits the hot tables, wide_blocks included [SyntheticEra]") {
+    checkSizing("gnosis", SyntheticEra.SizedEras, Seq("attestations", "wide_blocks"))(
+      SyntheticEra.sizedEraLoader(spark))
   }
 }
