@@ -57,6 +57,7 @@ class CompactionSpec extends AnyFunSuite {
     val r2 = Compaction.compactEraTable(spark, dir, targetBytes = 1L << 30)
     r2.foreach { r =>
       assert(r.filesBefore === r.filesAfter, s"re-compacted a compact partition: $r")
+      assert(r.rows === -1L, s"rewrote a compact partition instead of skipping it: $r")
     }
     // staged/trash work dirs are gone
     assert(!fs(dir).exists(new Path(dir, "_compact_staged")))
